@@ -65,7 +65,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cpus
     // Shuffle fan-out sized to the DATA VOLUME, exactly as AQE would at
     // runtime: the suite's largest shuffle payload at sf0.1 is
     // single-digit MB, below AQE's 64 MB advisory partition size, so
@@ -93,45 +93,33 @@ object Bench {
     // amortizes the per-stage launch floor across queries. Non-gating:
     // the driver's gate run leaves this unset.
     val threads = sys.env.getOrElse("SPARK_GRAFT_BENCH_THREADS", "1").toInt
-    // Single-file tables: without a smaller split size each scan is ONE
-    // task regardless of cores — split small so parquet decode parallelizes
-    // (row-group granularity bounds the effective fan-out).
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", adaptive)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = Harness.session("graft-bench",
+      "spark.sql.shuffle.partitions" -> shuffle,
+      "spark.sql.adaptive.enabled" -> adaptive,
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+      // Single-file tables: without a smaller split size each scan is
+      // ONE task regardless of cores — split small so parquet decode
+      // parallelizes (row-group granularity bounds the fan-out).
+      "spark.sql.files.maxPartitionBytes" -> "4m",
       // Keep the ContextCleaner fed DURING long ops too (r18b, §8b of
       // OPTIMIZATION_r18.md): dead broadcast/shuffle blocks are only
       // freed after a GC enqueues their weak refs, and the engine
       // default (30 min) lets a whole bench run age without one. 30 s
-      // matches the single_rep budget; the per-name scrub() below
-      // handles the between-ops debris deterministically.
-      .config("spark.cleaner.periodicGC.interval", "30s")
+      // matches the single_rep budget; Harness.scrub handles the
+      // between-ops debris deterministically.
+      "spark.cleaner.periodicGC.interval" -> "30s",
       // FAIR scheduling only matters when client threads submit jobs
       // concurrently: FIFO would let one query's stages starve the rest
       // and inflate tail latency for no throughput gain.
-      .config("spark.scheduler.mode", if (threads > 1) "FAIR" else "FIFO")
-    // Ad-hoc overrides for tuning experiments: "k=v;k=v".
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.scheduler.mode" -> (if (threads > 1) "FAIR" else "FIFO"))
     // Executed-stage accounting for the floor-adjusted gate (BASELINE.md
     // "Gate" section; SCALE.md §37): the artifact carries every term of
     // `suite ≤ 2 × (paired + total_stages × stage_ms)` co-measured in
-    // the same process — suite and paired already were; stage counts
-    // come from this listener, stage_ms from StageCounter's 2-stage
-    // probe below. Sequential q-suite runs only: in concurrent mode the
-    // interleaving makes per-query attribution meaningless, and for
-    // x-sets the paired control is a drift control, not an engine pair.
-    val stageCounter = new StageCounter
+    // the same process — stage counts come from the Harness listener
+    // around the timed reps, stage_ms from Harness.stageMs's 2-stage
+    // probe. Sequential runs only: in concurrent mode the interleaving
+    // makes per-query attribution meaningless.
     val countStages = threads <= 1
-    if (countStages) spark.sparkContext.addSparkListener(stageCounter)
     // Timed runs must execute the WHOLE plan every rep: the memoized
     // DataFrame's RDD lineage lets Spark skip already-computed shuffle
     // map stages on resubmission, which silently turned per-query
@@ -157,39 +145,21 @@ object Bench {
     val names = queries.keys.toSeq
       .filter(n => prefixes.exists(n.startsWith)).sorted
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    def once(name: String): Double = {
-      val f = queries(name) // lookup OUTSIDE the timed window
-      val t0 = System.nanoTime()
-      try f(spark, sfDir).collect()
+    // a failing query is recorded (thread-safe: conc mode) and reads -1
+    def guarded(name: String)(t: => Double): Double =
+      try t
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        failed.synchronized { failed += name } // thread-safe: conc mode
-        return -1.0
+        failed.synchronized { failed += name }
+        -1.0
       }
-      (System.nanoTime() - t0) / 1e9
+    def once(name: String): Double = {
+      val f = queries(name) // lookup OUTSIDE the timed window
+      guarded(name)(Harness.timed(f(spark, sfDir).collect())._1)
     }
-
-    // Between-names hygiene, in the UNTIMED gap (r18b measurement-bug
-    // fix, documented in OPTIMIZATION_r18.md §8b — old numbers kept):
-    // clearCache() alone was not enough. Dead broadcast/shuffle state
-    // from prior ops is freed only when a GC collects the
-    // ContextCleaner's weak refs, and a mostly-idle 8 g heap GCs so
-    // rarely that 30+ ops of debris accumulate in storage memory —
-    // measured: x80's width-parallel plan ran 43.9 s after 30 other ops
-    // vs 3.2 s in a fresh session (same code, same corpus), and 6.7 s
-    // with the cleaner forced along. A deterministic System.gc() in the
-    // per-name gap (never mid-rep, unlike spark.cleaner.periodicGC
-    // which fires on a wall clock) pins every op's timed reps to a
-    // clean session — the cross-op-interference class the clearCache
-    // comment below already names, one level deeper.
-    // Two GC passes with a drain pause: the first enqueues the dead
-    // refs, the cleaner thread then issues the (async) block removals,
-    // and the second pass collects what the removals freed. One pass
-    // measured 18.2 s for the x80 probe above — better than 43.9, far
-    // from the 3.2 s fresh-session truth.
-    def scrub(): Unit = {
-      spark.catalog.clearCache()
-      System.gc(); Thread.sleep(250); System.gc()
+    def median3(name: String): Double = {
+      val f = queries(name)
+      guarded(name)(Harness.median3(f(spark, sfDir).collect()).median)
     }
     // Warm-up ×2: JIT, codegen cache, parquet footers, broadcast
     // relations, AQE final plans (second pass runs fully warm, narrowing
@@ -197,7 +167,7 @@ object Bench {
     // NAME (not per rep): the persist-heavy extension operators register
     // a cache entry per canonicalized plan, and letting ~100 of them
     // accumulate starves execution memory — the same phantom-regression
-    // class Verify/Scratch hit (see Scratch's t() note). Within one
+    // class Verify hit (SCALE.md §13). Within one
     // name's warm-up + 3 timed reps the cache stays, so reps measure the
     // operator's warm cost exactly as the r4 protocol did.
     // Non-q sets get ONE global warm pass instead of two: with the r13
@@ -205,22 +175,19 @@ object Bench {
     // extension suite's honest wall cost is dominated by executions, and
     // the second pass's variance narrowing is not worth ~4 minutes of
     // wall per round. The q gate suite keeps the full protocol.
-    names.foreach { n => once(n); scrub() }
-    if (prefix == "q") names.foreach { n => once(n); scrub() }
+    names.foreach { n => once(n); Harness.scrub(spark) }
+    if (prefix == "q") names.foreach { n => once(n); Harness.scrub(spark) }
     // task-launch floor: one stage of 32 empty tasks, results straight
     // to the driver (no shuffle, no IO, no codegen) — the constant a
     // sub-floor query's time is made of
-    def floorOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.sparkContext.parallelize(0 until 32, 32).count()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def floorOnce(): Double =
+      Harness.timed(spark.sparkContext.parallelize(0 until 32, 32).count())._1
     floorOnce() // warm the floor job's own codegen
     val floorMs = Seq.fill(5)(floorOnce()).sorted.apply(2) * 1000.0
     // per-stage engine constant (2-stage zero-data SQL probe): the gate
-    // bound's co-measured constant — see StageCounter's scaladoc for why
-    // this, not floor_ms, prices a real stage boundary
-    val stageMs = StageCounter.stageMs(spark)
+    // bound's co-measured constant — see Harness.stageMs for why this,
+    // not floor_ms, prices a real stage boundary
+    val stageMs = Harness.stageMs(spark)
     // paired DuckDB pass #1: immediately before the timed Spark suite.
     // EVERY set pairs with the q-suite control (VERDICT r12 #1): for
     // prefix=q that is the apples-to-apples gate pair; for the
@@ -300,9 +267,8 @@ object Bench {
       if (threads <= 1) Nil
       else (1 to 3).map { _ =>
         val tasks = names.map(n => n -> ((_: SparkSession) => once(n)))
-        val t0 = System.nanoTime()
-        val times = Pipeline.concurrent(spark, tasks, threads)
-        val wall = (System.nanoTime() - t0) / 1e9
+        val (wall, times) =
+          Harness.timed(Pipeline.concurrent(spark, tasks, threads))
         spark.catalog.clearCache()
         // per-rep adjacency: the control pass runs in the same weather
         // as the rep it follows
@@ -314,30 +280,28 @@ object Bench {
         val byMedianRep = concWalls(concWalls.length / 2)._2
         names.map(n => n -> byMedianRep.getOrElse(n, -1.0))
       } else {
-        if (countStages) stageCounter.quiesce()
+        val stageCounter = Harness.listen(spark)
+        stageCounter.quiesce()
         names.map { n =>
-          val s0 = if (countStages) stageCounter.snapshot._1 else 0
+          val s0 = stageCounter.snapshot.stages
           val repop = once(n) // re-populate this name's cache entries after the clear
-          val ts =
+          val (t, execs) =
             if (prefix != "q" && repop > heavySingleRepSec) {
               singleRep += n
-              Seq(once(n))
-            } else Seq(once(n), once(n), once(n)).sorted
-          scrub()
-          if (countStages) {
-            // stages are plan-determined (AQE off ⇒ static), so the
-            // count across the repop + timed reps must divide evenly;
-            // a remainder means some rep executed a different plan —
-            // flag it rather than averaging it away
-            val execs = 1 + ts.length
-            val delta = stageCounter.quiesce()._1 - s0
-            if (delta % execs != 0) {
-              System.err.println(
-                s"[bench] $n stage count not rep-stable: $delta/$execs")
-              stageUnstable += n
-            }
-            totalStages += delta / execs
+              (once(n), 2)
+            } else (median3(n), 4)
+          Harness.scrub(spark)
+          // stages are plan-determined (AQE off ⇒ static), so the count
+          // across the repop + timed reps must divide evenly; a
+          // remainder means some rep executed a different plan — flag
+          // it rather than averaging it away
+          val delta = stageCounter.quiesce().stages - s0
+          if (delta % execs != 0) {
+            System.err.println(
+              s"[bench] $n stage count not rep-stable: $delta/$execs")
+            stageUnstable += n
           }
+          totalStages += delta / execs
           // the interleaved pair, timed NOW — adjacent to the Spark
           // reps it normalizes: the same query's oracle on the q-suite;
           // the next control name in the rotation on the x-set
@@ -348,7 +312,7 @@ object Bench {
               ctrlIdx += 1
             }
           }
-          n -> ts(ts.length / 2)
+          n -> t
         }
       }
     duckWorker.foreach(_.close())
@@ -453,11 +417,10 @@ object Bench {
       if (duckQ.isEmpty) ""
       else s""","duckdb_queries":${duckQ.toSeq.sortBy(_._1).map { case (k, v) =>
         s""""${esc(k)}":${"%.5f".format(v)}""" }.mkString("{", ",", "}")},"duckdb_interleaved_total":${num(interleavedTotal)}"""
-    // "cpus" in BOTH output lines (r18, VERDICT r17 #2): the bench has
-    // always honored $SPARK_GRAFT_CPUS (master local[$cpus] above); the
-    // artifact now SAYS so itself, so a scaling consumer reading only
-    // the JSON can pair low/high-core runs without trusting its own
-    // env bookkeeping.
+    // "cpus" in BOTH output lines (r18, VERDICT r17 #2): the bench runs
+    // on local[Harness.cpus], and the artifact SAYS so itself, so a
+    // scaling consumer reading only the JSON can pair low/high-core runs
+    // without trusting its own env bookkeeping.
     println(s"""{"metric":"suite_total","value":${"%.4f".format(total)},"unit":"sec","cpus":$cpus,"queries":$qs,"sf":"${esc(sfDir)}","floor_ms":${"%.1f".format(floorMs)},"paired_control":"${PairedControl.ControlName}","paired_mode":"$pairedMode","duckdb_pre_total":${num(duckPre)},"duckdb_post_total":${num(duckPost)},"duckdb_paired_total":${num(paired)},"paired_total":${num(paired)},"paired_ratio":${num(pairedRatio)}$duckQJs,"failed":$failedJs,"single_rep":$singleRepJs$concJs$gateJs}""")
     // Tail-proof headline (VERDICT r16 #2): the full line above can
     // outgrow a consumer's tail capture (the interleaved per-query map

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -55,19 +55,12 @@ object BenchStream {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER: multi-JVM validation (VERDICT r14 #1, SCALE.md
-    // §42) — local-cluster runs the same drains with the state stores
-    // living in real executor processes (launch via spark-submit).
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-bench-stream")
-      .config("spark.sql.shuffle.partitions",
+    // SPARK_GRAFT_MASTER (Harness.session): local-cluster runs the same
+    // drains with the state stores living in real executor processes
+    // (VERDICT r14 #1, SCALE.md §42; launch via spark-submit).
+    val spark = Harness.session("graft-bench-stream",
+      "spark.sql.shuffle.partitions" ->
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     // ---- replay corpora (written once; timings only read them) ------
     val docs = Catalog.load(spark, sfDir, "documents")
@@ -227,12 +220,6 @@ object BenchStream {
         new scala.reflect.io.Directory(new java.io.File(table)).deleteRecursively()
       })
 
-    def once(f: () => Unit): Double = {
-      val t0 = System.nanoTime()
-      f()
-      (System.nanoTime() - t0) / 1e9
-    }
-
     // SPARK_GRAFT_STREAM_OPS=a,b: run a subset — the 10× streaming soak
     // (VERDICT r10 #6) times only the two state-heavy ops on the soak
     // corpus instead of paying the full suite at 10×.
@@ -282,11 +269,11 @@ object BenchStream {
     val medians = ops
       .filter { case (name, _) => wanted.forall(_.contains(name)) }
       .map { case (name, f) =>
-      once(f) // warm-up: JIT, codegen, footers
-      val ts = Seq(once(f), once(f), once(f))
-      rawWalls(name) = ts
+      f() // warm-up: JIT, codegen, footers
+      val t = Harness.median3(f())
+      rawWalls(name) = t.walls
       opControls(name) = ctrlPass() // adjacent: same weather as the drains
-      name -> ts.sorted.apply(1)
+      name -> t.median
     }
     duckWorker.foreach(_.close())
     val duckPost = PairedControl.qControl(sfDir)

@@ -149,15 +149,12 @@ object Catalog {
     * measures ONLY THE FINAL STAGE after rep 1. Discovered r13 from an
     * impossibility: x74's 9.6M-row pipeline "ran" in 50 ms memoized vs
     * 3.8 s fresh. Bench disables the cache for every timed set
-    * (SCALE.md §36); Verify keeps it (correctness, not timing). The
-    * env form (`SPARK_GRAFT_PLANCACHE=off`) exists for ad-hoc runs. */
+    * (SCALE.md §36); Verify keeps it (correctness, not timing). */
   @volatile var planCacheEnabled: Boolean = true
-  private def cacheOff: Boolean =
-    !planCacheEnabled || sys.env.get("SPARK_GRAFT_PLANCACHE").contains("off")
 
   def sql(spark: SparkSession, dir: String, sqlText: String): DataFrame = {
     ensure(spark, dir)
-    if (cacheOff) return spark.sql(sqlText)
+    if (!planCacheEnabled) return spark.sql(sqlText)
     if (planCache.size > planCacheMax) {
       // weak keys cannot work here — the cached DataFrames back-
       // reference their session, so the entry's VALUE would pin the

@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev utility: run the flagship entry + selected queries, print row counts
-  * and formatted physical plans (for shuffle/pushdown/codegen iteration).
+/** Dev utility: run the flagship entry + selected queries, print each
+  * query's row count, the engine work its collect executed (stages,
+  * tasks, jobs, executor run time — the per-query columns of SCALE.md
+  * §37.2's stage audit, one cold run), and its optimized and formatted
+  * physical plans (for shuffle/pushdown/codegen iteration).
   *
   * Usage: sbt "runMain graft.Explain [sfDir] [queryName ...]"
   */
@@ -11,21 +12,22 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else Seq("q16_multiway_join")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-explain",
+      "spark.sql.shuffle.partitions" -> Harness.cpus.toString,
+      "spark.log.level" -> "WARN")
 
     val e = SparkEntry.entry(spark)
     println(s"[explain] entry rows=${e.count()}")
 
+    val counter = Harness.listen(spark)
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, dir)
-      println(s"\n==== $n rows=${df.count()} ====")
+      val c0 = counter.quiesce()
+      val (sec, rows) = Harness.timed(df.collect().length)
+      val c = counter.quiesce() - c0
+      println(f"\n==== $n rows=$rows wall=${sec * 1000}%.1f ms " +
+        s"stages=${c.stages} tasks=${c.tasks} jobs=${c.jobs} " +
+        s"exec_ms=${c.executorRunMs} ====")
       println(df.queryExecution.optimizedPlan.treeString)
       df.explain("formatted")
     }

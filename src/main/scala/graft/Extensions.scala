@@ -137,7 +137,7 @@ object Extensions {
     // IVFADC ANN top-10: product-quantized residual codes over the IVF
     // lists (memory-bounded index: 64 float dims → 16 byte-codes + norm,
     // 11.6× smaller), probe + asymmetric-distance scoring + exact
-    // re-rank. Params pinned from the PqProbe sf0.1 sweep (SCALE.md
+    // re-rank. Params pinned from the IVFPQ sf0.1 sweep (SCALE.md
     // §9.4). Declared at FULL probe (nProbe = nLists), where — like
     // x54/x59/x104 — equality with brute force is STRUCTURAL: the
     // full-probe path trains/encodes/probes but never consults the PQ

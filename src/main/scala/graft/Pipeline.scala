@@ -100,20 +100,12 @@ object Pipeline {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-pipeline",
+      "spark.sql.shuffle.partitions" -> Harness.cpus.toString)
 
     def stage(name: String, in: Long)(f: => DataFrame): (DataFrame, Long) = {
-      val t0 = System.nanoTime()
-      val out = f
-      val n = out.count()
-      println(f"""{"stage":"$name","rows_in":$in,"rows_out":$n,"sec":${(System.nanoTime() - t0) / 1e9}%.3f}""")
+      val (sec, (out, n)) = Harness.timed { val out = f; (out, out.count()) }
+      println(f"""{"stage":"$name","rows_in":$in,"rows_out":$n,"sec":$sec%.3f}""")
       (out, n)
     }
 

@@ -33,17 +33,15 @@ object Queries {
     * AQE's coalescing alike — sees single-digit-MB inputs and folds such a
     * plan into ONE task, serializing tens of millions of produced rows
     * (guide §3.3, the exploding-join blind spot; OPTIMIZATION_r18.md §6).
-    * Parameterized off the driver's own core-count contract
-    * (`SPARK_GRAFT_CPUS`, local default 32), NOT a hard-coded local
+    * Parameterized off the run's core count ([[Harness.cpus]]: a
+    * malformed `SPARK_GRAFT_CPUS` fails the run), NOT a hard-coded local
     * constant: the 8-core companion run gets width 8, a cluster session
     * gets its configured width. At 100 TB the same hint is the explicit
     * hash-repartition any exploding self-join needs; width there is sized
     * to cores/output-volume, and AQE skew splits handle residual key skew.
     * Hash partitioning is deterministic and aggregation-exact, so declared
     * results are bit-identical at any width (InvariantsSpec pins this). */
-  private val hintPar: Int =
-    math.max(1, scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrElse(32))
+  private def hintPar: Int = Harness.cpus
 
   /** Deliberately-quadratic exact baselines (the plans their banded/LSH
     * siblings are recall-verified against). Contract-SF only: Verify

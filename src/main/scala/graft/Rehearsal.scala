@@ -39,23 +39,15 @@ object Rehearsal {
   }
 
   private def phase[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    val dt = (System.nanoTime() - t0) / 1e9
+    val (dt, r) = Harness.timed(f)
     val (used, max) = heapMB()
     println(f"[rehearsal] $name%-18s ${dt}%8.1f s   post-gc heap ${used}%5d / $max MB")
     r
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-rehearsal")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-rehearsal",
+      "spark.sql.shuffle.partitions" -> "64")
     val fs = org.apache.hadoop.fs.FileSystem
       .get(spark.sparkContext.hadoopConfiguration)
 
@@ -391,24 +383,19 @@ object Rehearsal {
     println(s"[rehearsal] kmeans corpus: 500-rep vectors=$n500 (10x pair at " +
       spark.read.parquet(s"$d50/embeddings.parquet").count() + ")")
 
-    def trainAt(dir: String, tag: String): (graft.llm.KMeans.Train, Seq[Double]) = {
+    def trainAt(dir: String, tag: String): graft.llm.KMeans.Train = {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      // per-round walls from the trace timestamps: train() is one call,
-      // so time rounds via a wrapped maxIters ladder would re-run
-      // earlier rounds — instead time the whole 3-round loop and let
-      // the 10×-vs-100× wall ratio carry the data term; round count is
-      // fixed (3) so per-round wall = total/3 within the loop's
-      // amortized persist.
-      val t0 = System.nanoTime()
-      val t = phase(s"train3 $tag") {
+      // train() is one call, so timing rounds via a wrapped maxIters
+      // ladder would re-run earlier rounds — instead the phase line
+      // times the whole 3-round loop and the 10×-vs-100× wall ratio
+      // carries the data term (per-round wall = total/3).
+      phase(s"train3 $tag") {
         graft.llm.KMeans.train(emb, k = k, dims = 64, maxIters = 3,
           stopWhenStable = false)
       }
-      val wall = (System.nanoTime() - t0) / 1e9
-      (t, Seq(wall / 3, wall / 3, wall / 3))
     }
-    val (t50, _) = trainAt(d50, "100k")
-    val (t500, _) = trainAt(d500, "1M")
+    val t50 = trainAt(d50, "100k")
+    val t500 = trainAt(d500, "1M")
     def census(t: graft.llm.KMeans.Train) = t.summary.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     val c50 = census(t50)
@@ -549,7 +536,7 @@ object Rehearsal {
       s"LUT tier must answer top-10 per query: ${servedLut.size} vs ${nq * 10}")
     // recall vs the exact tier at the SAME probe sets: the LUT path's
     // only loss is quantization error inside candidate truncation —
-    // with the m=16/ksub=64 codebooks the PqProbe sweep found
+    // with the m=16/ksub=64 codebooks the SCALE.md §9.4 sweep found
     // recall-lossless; a big drop here is a codebook/kernel regression
     val exactSets = served.groupBy(_._1).view.mapValues(_.map(_._3).toSet).toMap
     val lutSets = servedLut.groupBy(_._1).view.mapValues(_.map(_._3).toSet).toMap

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -18,24 +17,17 @@ object Verify {
     // queries without a full-inventory run (the driver never passes it)
     val only: Set[String] = args.find(_.startsWith("only="))
       .map(_.stripPrefix("only=").split(",").toSet).getOrElse(Set.empty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Shuffle fan-out defaults to core count (the driver-gate protocol),
     // but pair-explosion queries at soak scale need partitions ≫ cores so
     // per-task hash state fits execution memory — the same knob a real
     // cluster turns (observed: x80 at the 10x corpus needs ~256).
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // SPARK_GRAFT_MASTER: the multi-JVM validation knob (VERDICT r14
-    // #1) — `local-cluster[2,16,4096]` runs the SAME dump with real
-    // executor processes, exercising cross-JVM serialization of every
-    // native expression/aggregator buffer (launch via spark-submit so
-    // the packaged jar reaches the executor classpaths; SCALE.md §41).
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER=local-cluster[2,16,4096] runs the SAME dump with
+    // real executor processes, exercising cross-JVM serialization of
+    // every native expression/aggregator buffer (SCALE.md §41).
+    val spark = Harness.session("graft-verify",
+      "spark.sql.shuffle.partitions" ->
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", Harness.cpus.toString),
+      "spark.log.level" -> "WARN")
     new java.io.File(outDir).mkdirs()
     // Quadratic exact baselines run only on the contract corpora (the
     // driver's /root/testdata SFs); on soak-scale inputs they are the

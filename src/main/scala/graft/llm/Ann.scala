@@ -170,7 +170,7 @@ object Ann {
     * pass). Deterministic: seeded sample, first-distinct init, fixed
     * iteration count.
     *
-    * Defaults (m=16, ksub=64) are pinned from the PqProbe sweep at sf0.1
+    * Defaults (m=16, ksub=64) are pinned from the IVFPQ sweep at sf0.1
     * (SCALE.md §9.4): with these codebooks + refine=10 the PQ tier is
     * recall-lossless relative to the IVF probe ceiling — the coarser
     * m=8/ksub=16 config lost 4 of 10 true neighbors to quantization

@@ -49,10 +49,10 @@ object Dedup {
     * The previous form — element i = min of xxhash64(s, i) — re-hashed
     * every shingle STRING per signature slot: 64 string hashes per
     * shingle, vs one here plus 64 integer affine transforms. Honest
-    * measurement (Scratch `sigkernel`, fresh JVM, 3 alternating reps at
+    * measurement (SCALE.md §4, fresh JVM, 3 alternating reps at
     * sf0.1): kernel 1.1–1.7 s affine vs 1.5–2.0 s per-slot — ~1.2–1.6×,
     * NOT the 46× an earlier in-battery timing suggested (that was cache
-    * starvation across the battery, see the `t()` note in Scratch). The
+    * starvation across the battery, SCALE.md §13). The
     * win is asymptotic, not local: string-hash work drops 64× per
     * shingle byte, and this corpus's ~short synthetic shingles make the
     * kernel scheduling-bound; at real KB-document scale the per-slot
@@ -75,8 +75,8 @@ object Dedup {
     * `perms` is the canonical [[portablePerms]] table (every repo call
     * site) — Spark runs HOF lambda bodies interpreted per element, so
     * the composition below paid numHashes × |shingles| boxed closure
-    * dispatches per row (~1.7 s per sf0.1 corpus pass, Scratch
-    * sigkernel). The HOF form remains the executable specification
+    * dispatches per row (~1.7 s per sf0.1 corpus pass, SCALE.md
+    * §30). The HOF form remains the executable specification
     * ([[affineSignatureHof]], LlmOpsSpec holds the two bit-identical,
     * nulls included). */
   def affineSignature(shs: Column, perms: Seq[(Long, Long)],

@@ -151,8 +151,8 @@ object KMeans {
       .repartition(col("vec_id")) // the ONE corpus shuffle, amortized over all rounds
       .persist()
     // a failure mid-training must not strand cache entries in the
-    // long-lived session (the phantom-regression class Bench/Scratch
-    // document): every persisted handle is released on EVERY exit path
+    // long-lived session (the phantom-regression class SCALE.md §13
+    // documents): every persisted handle is released on EVERY exit path
     var assign: DataFrame = null
     try {
       var cent: Seq[(Long, Int, Long)] = initial

@@ -112,7 +112,7 @@ object Graph {
     * identical EXCHANGE subtrees (contrast [[ConnectedComponents]],
     * whose twice-referenced `prop` ends in a shuffle agg — its
     * exchange IS reused, one extra final-agg pass instead of a
-    * rebuild; `Scratch ccreuse` pins both behaviors). Measured at
+    * rebuild; SCALE.md §29 records both behaviors). Measured at
     * sf0.1/iters=2: per-half-step truncation ~2.4 s, one nested round
     * ~4.7 s, fully nested 7–15 s, and iters=6 nested (2¹² copies)
     * fails outright. Scores are therefore localCheckpoint'ed after

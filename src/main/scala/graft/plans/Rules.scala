@@ -81,7 +81,7 @@ object FuseMd5Prefix32 extends Rule[LogicalPlan] {
   *
   * Measured effect vs NO rule either way: q38 (4× BigDecimal `round` +
   * sqrt/ln/power over 600k rows, top-500) drops from ~950ms to
-  * scan+sort cost (QProbe no-defer A/B at sf0.1).
+  * scan+sort cost (no-defer A/B at sf0.1, SCALE.md §25).
   *
   * Safety: requires (a) every sort key resolves against the projection's
   * child, (b) all projections deterministic, (c) no window/agg in between

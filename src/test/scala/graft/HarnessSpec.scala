@@ -1,0 +1,40 @@
+package graft
+
+/** The measurement harness's own contracts: the core-count parser fails
+  * loudly, the timer reports what it ran, and the listener counts the
+  * stages the per-stage probe divides by. */
+class HarnessSpec extends SparkSpec {
+
+  test("SPARK_GRAFT_CPUS: a malformed value fails, naming the variable") {
+    Seq("abc", "0", "-2", "").foreach { v =>
+      val e = intercept[IllegalArgumentException](Harness.parseCpus(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), s"'$v': ${e.getMessage}")
+    }
+  }
+
+  test("SPARK_GRAFT_CPUS: unset means every available processor") {
+    assert(Harness.parseCpus(None) == Runtime.getRuntime.availableProcessors)
+    assert(Harness.parseCpus(Some("3")) == 3)
+  }
+
+  test("median3: three walls in run order, the first result, `between` after each rep") {
+    var runs = 0
+    var cleared = 0
+    val t = Harness.median3({ runs += 1; runs }, cleared += 1)
+    assert(runs == 3 && cleared == 3 && t.first == 1)
+    assert(t.walls.length == 3 && t.walls.forall(_ >= 0.0))
+    assert(t.median == t.walls.sorted.apply(1))
+  }
+
+  test("listener: the 2-stage probe query counts 2 stages and a job") {
+    val l = Harness.listen(spark)
+    try {
+      val c0 = l.quiesce()
+      spark.sql("SELECT id % 4 AS k, count(*) FROM range(0, 8, 1, 8) GROUP BY 1").collect()
+      val d = l.quiesce() - c0
+      assert(d.stages == 2, s"$d")
+      assert(d.jobs >= 1 && d.tasks >= 9, s"$d")
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(Harness.stageMs(spark, reps = 3) > 0.0)
+  }
+}

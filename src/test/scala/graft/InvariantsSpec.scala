@@ -60,20 +60,27 @@ class InvariantsSpec extends SparkSpec {
   }
 
   test("declared queries are invariant to shuffle width (determinism)") {
-    // the riskiest ordering/accumulation queries, executed under different
-    // shuffle fan-out — results must be identical row-for-row
+    // the riskiest ordering/accumulation queries, plus every entry whose
+    // Spark text carries the REPARTITION(<Harness.cpus>, …) width hint —
+    // the hinted float aggregates x269 (corr) and x272 (sum(1/ln d))
+    // among them — executed under different shuffle fan-out AND hint
+    // width: results must be identical row-for-row
+    val hint = s"REPARTITION(${Harness.cpus},"
+    val hinted = Queries.all.filter(_.spark.contains(hint)).map(_.name)
+    assert(Seq("x269_assortativity", "x272_link_prediction").forall(hinted.contains),
+      s"hinted set lost its float aggregates: $hinted")
     val risky = Seq("q23_asof_join", "q28_running_total",
-      "q31_sessionization", "q41_collect_agg", "q13_wordcount")
+      "q31_sessionization", "q41_collect_agg", "q13_wordcount") ++ hinted
     Catalog.ensure(spark, sf0001)
-    risky.foreach { name =>
-      val sql = Queries.sparkSql(name)
-      spark.conf.set("spark.sql.shuffle.partitions", "3")
-      val a = spark.sql(sql).collect().map(_.toString).toSeq
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      val b = spark.sql(sql).collect().map(_.toString).toSeq
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      assert(a == b, s"$name changed under different shuffle widths")
+    def at(name: String, width: Int): Seq[String] = {
+      spark.conf.set("spark.sql.shuffle.partitions", width.toString)
+      spark.sql(Queries.sparkSql(name).replace(hint, s"REPARTITION($width,"))
+        .collect().map(_.toString).toSeq
     }
+    try risky.foreach { name =>
+      assert(at(name, 3) == at(name, 7),
+        s"$name changed under different shuffle/hint widths")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
   }
 
   test("sessionization is invariant to input row order") {

@@ -205,7 +205,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("multiprobe lsh: recall >= IVF at equal candidate budget (sf0.1)") {
-    // Measured sweep (PqProbe, SCALE.md §9.3): at ~500 candidates IVF
+    // Measured sweep (SCALE.md §9.3): at ~500 candidates IVF
     // nProbe=4/16 reaches 6/10; multiprobe planes=8/probes=64 reaches
     // 6/10 over 529 — equal recall at equal budget, and the probe list
     // is a prunable IN where x54's radius filter is a full scan. At 2×
@@ -417,7 +417,7 @@ class LlmOpsSpec extends SparkSpec {
     // sf0.1: 2000 64-dim vectors — the largest corpus in the testdata.
     // The embeddings are random, so the exact top-10 of a query scatter
     // across IVF lists (measured ceiling: nProbe=4 reaches only 6 of the
-    // 10, even UNquantized — PqProbe sweep, SCALE.md §9.4). The contract
+    // 10, even UNquantized — IVFPQ sweep, SCALE.md §9.4). The contract
     // therefore tests the two failure modes separately:
     //  (1) full probe (nProbe = nLists): quantization + refine must be
     //      recall-lossless — any miss here is PQ's fault, not IVF's;

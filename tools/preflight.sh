@@ -21,7 +21,7 @@ props_line=$(grep -E "^\[info\] Passed: Total" /tmp/preflight_test.log | tail -1
 
 echo "[preflight] Verify sf0.01 ..."
 rm -rf /tmp/preflight_verify
-SPARK_GRAFT_CPUS=8 sbt -batch \
+SPARK_GRAFT_CPUS=$(nproc) sbt -batch \
   "runMain graft.Verify /root/testdata/sf0.01 /tmp/preflight_verify" \
   >/tmp/preflight_verify.log 2>&1
 verify_rc=$?
