@@ -29,6 +29,20 @@ class ContractSpec extends SparkSpec {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  // The gate's input, pinned: every oracle text, sorted by name. An edit
+  // to any oracle (hand-written or DuckDialect-derived) must change this
+  // digest in plain view. It does not depend on SPARK_GRAFT_CPUS: no
+  // oracle text carries a REPARTITION width.
+  test("oracle texts: 395 entries with the pinned SHA-256") {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    SparkEntry.oracleSql.toSeq.sortBy(_._1).foreach { case (name, sql) =>
+      md.update(s"$name\n$sql\n".getBytes("UTF-8"))
+    }
+    assert(SparkEntry.oracleSql.size == 395)
+    assert(md.digest().map(b => f"$b%02x").mkString ==
+      "7949f8aa7b4b9342de7acb8522264436b4b3a8945d5bd5568a589254430c882f")
+  }
+
   // The gate bound prices the FROZEN ProtocolStages=134 constant, which
   // is only meaningful for the exact q inventory it was frozen over.
   // This test makes an inventory change fail HERE (forcing a deliberate
@@ -51,7 +65,7 @@ class ContractSpec extends SparkSpec {
   // decimal only inside x123, which ships it cast AS STRING, so even
   // x123's OUTPUT schema is decimal-free and no whitelist is needed.
   // Analysis-only (`spark.sql(...).schema` resolves without execution),
-  // so the whole ~250-entry SQL inventory checks in seconds.
+  // so the whole 354-entry SQL inventory checks in seconds.
   test("type parity: no query output column is DecimalType") {
     Catalog.ensure(spark, sf0001)
     def hasDecimal(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {

@@ -456,6 +456,20 @@ class PlanAuditSpec extends SparkSpec {
       s"recursion inlined more than once:\n${opt.take(1500)}")
   }
 
+  test("x274: stage count at or under its single-UnionLoop ceiling") {
+    // 276 stages at sf0.001 under this spec session (fresh plan, no
+    // Catalog plan cache), measured when the ceiling was set; a plan
+    // change that re-inlines the recursion multiplies it
+    Catalog.ensure(spark, sf0001)
+    val l = Harness.listen(spark)
+    try {
+      val c0 = l.quiesce()
+      spark.sql(Queries.sparkSql("x274_holt_linear")).collect()
+      val d = l.quiesce() - c0
+      assert(d.stages <= 276, s"x274 stage count over its ceiling: $d")
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("r18 x363: bottom-64 restriction is pushed per source; sizes stated once") {
     val opt = SparkEntry.queries("x363_kmv_source_jaccard")(spark, sf0001)
       .queryExecution.optimizedPlan.toString

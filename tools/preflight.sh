@@ -26,6 +26,9 @@ SPARK_GRAFT_CPUS=$(nproc) sbt -batch \
   >/tmp/preflight_verify.log 2>&1
 verify_rc=$?
 verify_errs=$(grep -c "^\[verify\] .* failed:" /tmp/preflight_verify.log)
+# The gate's input: a digest of the oracle texts Verify dumped, so every
+# recorded HEAD shows whether an oracle text changed.
+oracle_sql_sha256=$(sha256sum /tmp/preflight_verify/oracle_sql.json 2>/dev/null | cut -d' ' -f1)
 
 echo "[preflight] DuckDB oracle compare ..."
 python3 tools/oracle_check.py /root/testdata/sf0.01 /tmp/preflight_verify \
@@ -53,6 +56,7 @@ cat > PREFLIGHT.json <<EOF
   "git_head": "$(git rev-parse --short HEAD)",
   "sbt_test": {"rc": $test_rc, "summary": "$tests_line", "scalacheck": "$props_line"},
   "verify_sf001": {"rc": $verify_rc, "query_errors": $verify_errs},
+  "oracle_sql_sha256": "$oracle_sql_sha256",
   "oracle": {"rc": $oracle_rc, "summary": "$oracle_line"},
   "leak_hits": $leak_hits,
   "green": $green
