@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Streaming CDC apply — the sink half of x169's MERGE semantics, fed
   * by a change stream instead of a delta snapshot. Each micro-batch is
@@ -55,14 +56,31 @@ import org.apache.hadoop.fs.Path
   * txn (crash AFTER commit, BEFORE the engine checkpointed), the replay
   * is a no-op returning the existing version — the batch is applied
   * exactly once across crash-restarts.
+  *
+  * Filesystem handle: the sink's own Hadoop calls and its bucket writes
+  * resolve `file:` through [[NioLocalFileSystem]] ([[sinkConf]] and the
+  * writer options). Without libhadoop the stock local filesystem forks a
+  * `chmod` for every file and directory it creates — about 60 forks of
+  * about 2.7 ms each per micro-batch (SCALE.md §54); the NIO chmod sets
+  * the same bits in-process. Other schemes, and every reader
+  * and writer outside this sink, keep the session's filesystem.
   */
 object CdcStream {
 
   private val Manifest = "manifest.tsv"
   private val Txn = "txn"
 
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The session's Hadoop conf with `file:` routed through
+    * [[NioLocalFileSystem]]; it differs only in `fs.file.*` keys. */
+  private[graft] def sinkConf(spark: SparkSession): Configuration = {
+    val c = new Configuration(spark.sparkContext.hadoopConfiguration)
+    NioLocalFileSystem.Conf.foreach { case (k, v) => c.set(k, v) }
+    c
+  }
+
+  /** The sink's filesystem handle for `tableDir`, made once per call. */
+  private def fs(spark: SparkSession, tableDir: String): FileSystem =
+    new Path(tableDir).getFileSystem(sinkConf(spark))
 
   /** Newest modification time anywhere under `p` (the dir itself, every
     * descendant dir, every file — `_temporary` trees included). Vacuum's
@@ -97,9 +115,8 @@ object CdcStream {
   /** Committed versions only: a v* directory is a commit iff the
     * atomic rename landed its manifest (ADVICE r5: presence of the
     * directory alone is NOT commit evidence). */
-  private def versionDirs(spark: SparkSession, tableDir: String): Seq[(Long, Path)] = {
+  private def versionDirs(f: FileSystem, tableDir: String): Seq[(Long, Path)] = {
     val root = new Path(tableDir)
-    val f = fs(spark, root)
     if (!f.exists(root)) Nil
     else f.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.matches("v\\d+") &&
@@ -112,8 +129,7 @@ object CdcStream {
   private final case class Commit(schema: StructType, nBuckets: Int,
                                   buckets: Map[Int, String])
 
-  private def readManifest(spark: SparkSession, vDir: Path): Commit = {
-    val f = fs(spark, vDir)
+  private def readManifest(f: FileSystem, vDir: Path): Commit = {
     val in = f.open(new Path(vDir, Manifest))
     val lines = try {
       scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
@@ -128,8 +144,7 @@ object CdcStream {
   }
 
   /** The txn id recorded by commit `vDir`, if its writer supplied one. */
-  private def readTxn(spark: SparkSession, vDir: Path): Option[String] = {
-    val f = fs(spark, vDir)
+  private def readTxn(f: FileSystem, vDir: Path): Option[String] = {
     val p = new Path(vDir, Txn)
     if (!f.exists(p)) None
     else {
@@ -149,10 +164,9 @@ object CdcStream {
     * writer wrote — rename-to-existing is not trusted to fail (HDFS
     * moves src INTO an existing destination), so a lost race is
     * detected by content, with the winner's commit untouched. */
-  private def commit(spark: SparkSession, tableDir: String, n: Long,
+  private def commit(f: FileSystem, tableDir: String, n: Long,
                      c: Commit, txnId: Option[String]): Unit = {
     val root = new Path(tableDir)
-    val f = fs(spark, root)
     val tmp = new Path(root, s".tmp-v$n-${java.util.UUID.randomUUID()}")
     f.mkdirs(tmp)
     val body = manifestBody(c)
@@ -165,7 +179,7 @@ object CdcStream {
     val dest = new Path(root, s"v$n")
     val renamed = f.rename(tmp, dest)
     val landed =
-      try manifestBody(readManifest(spark, dest)) == body
+      try manifestBody(readManifest(f, dest)) == body
       catch { case _: Exception => false }
     if (!renamed || !landed)
       throw new IllegalStateException(s"concurrent commit of v$n in $tableDir")
@@ -178,9 +192,11 @@ object CdcStream {
 
   /** The latest committed table state (None if no committed version).
     * Retained tombstones are filtered out; live rows carry their seq. */
-  def latest(spark: SparkSession, tableDir: String): Option[DataFrame] =
-    versionDirs(spark, tableDir).lastOption
-      .map { case (_, p) => visible(readCommit(spark, readManifest(spark, p))) }
+  def latest(spark: SparkSession, tableDir: String): Option[DataFrame] = {
+    val f = fs(spark, tableDir)
+    versionDirs(f, tableDir).lastOption
+      .map { case (_, p) => visible(readCommit(spark, readManifest(f, p))) }
+  }
 
   /** Time travel: the table as of committed version `n`. A version
     * outside the committed set (never written, or expired by [[vacuum]])
@@ -189,28 +205,56 @@ object CdcStream {
     * other half, a HANDLE obtained before vacuum, fails at execution;
     * see [[vacuum]]). */
   def readVersion(spark: SparkSession, tableDir: String, n: Long): DataFrame = {
-    val vd = versionDirs(spark, tableDir).toMap
+    val f = fs(spark, tableDir)
+    val vd = versionDirs(f, tableDir).toMap
     val p = vd.getOrElse(n, throw new NoSuchElementException(
       s"version v$n is not committed in $tableDir " +
         s"(committed: ${vd.keys.toSeq.sorted.mkString("v", ", v", "")}) — " +
         "it may have been vacuumed"))
-    visible(readCommit(spark, readManifest(spark, p)))
+    visible(readCommit(spark, readManifest(f, p)))
   }
 
   /** Committed version numbers, ascending (spec / operational). */
   def versions(spark: SparkSession, tableDir: String): Seq[Long] =
-    versionDirs(spark, tableDir).map(_._1)
+    versionDirs(fs(spark, tableDir), tableDir).map(_._1)
 
   /** The bucket->dir map of committed version `n` (spec / debugging:
     * lets a test assert untouched buckets reference IDENTICAL files
     * across commits). */
   def bucketDirs(spark: SparkSession, tableDir: String, n: Long): Map[Int, String] = {
-    val vd = versionDirs(spark, tableDir).toMap
-    readManifest(spark, vd(n)).buckets
+    val f = fs(spark, tableDir)
+    readManifest(f, versionDirs(f, tableDir).toMap.apply(n)).buckets
   }
 
   private def bucketOf(key: org.apache.spark.sql.Column, nBuckets: Int) =
     pmod(xxhash64(key), lit(nBuckets.toLong)).cast("int")
+
+  /** The latest version, if it already carries `txnId` (replay no-op). */
+  private def replayed(f: FileSystem, vs: Seq[(Long, Path)],
+                       txnId: Option[String]): Option[Long] = for {
+    t <- txnId; (n, p) <- vs.lastOption
+    if readTxn(f, p).contains(t)
+  } yield n
+
+  /** Fail BEFORE writing any data if v<next> already exists (committed
+    * or mid-rename) — never rely on the rename refusing (ADVICE r6). */
+  private def requireFree(f: FileSystem, tableDir: String, next: Long): Unit =
+    if (f.exists(new Path(new Path(tableDir), s"v$next")))
+      throw new IllegalStateException(s"version v$next already exists in $tableDir")
+
+  /** Write `df` bucketed on `keyCol` into a fresh data dir for commit
+    * `next`; returns the `b=<x>` dirs the write produced. The dir is
+    * unique per attempt, so no writer (racer or replayer) can ever
+    * overwrite files an existing manifest references (ADVICE r6). */
+  private def writeBuckets(f: FileSystem, tableDir: String, next: Long,
+                           df: DataFrame, keyCol: String, nb: Int): Map[Int, String] = {
+    val dataDir = s"$tableDir/data/v$next-${java.util.UUID.randomUUID().toString.take(8)}"
+    df.withColumn("b", bucketOf(col(keyCol), nb))
+      .write.options(NioLocalFileSystem.Conf).partitionBy("b").parquet(dataDir)
+    f.listStatus(new Path(dataDir)).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("b="))
+      .map(s => s.getPath.getName.drop(2).toInt -> s.getPath.toString).toMap
+  }
 
   /** Column names the merge plumbing owns: the physical partition
     * column plus the __-prefixed scratch columns. A batch using one of
@@ -276,14 +320,12 @@ object CdcStream {
     // filter without knowing the caller's column naming)
     val storedCols = payloadCols ++ Seq(seqCol, "__dead")
 
-    val vs = versionDirs(spark, tableDir)
+    val f = fs(spark, tableDir)
+    val vs = versionDirs(f, tableDir)
     // replay idempotence: the latest commit already applied this txn
-    val alreadyApplied = for {
-      t <- txnId; (n, p) <- vs.lastOption
-      if readTxn(spark, p).contains(t)
-    } yield n
+    val alreadyApplied = replayed(f, vs, txnId)
     if (alreadyApplied.isDefined) return alreadyApplied.get
-    val prev = vs.lastOption.map { case (_, p) => readManifest(spark, p) }
+    val prev = vs.lastOption.map { case (_, p) => readManifest(f, p) }
     prev.foreach { p =>
       val stored = p.schema.fieldNames.toSet
       if (!stored.contains(seqCol) || !stored.contains("__dead"))
@@ -301,86 +343,64 @@ object CdcStream {
     // bucket scheme is fixed at table creation; later batches follow it
     val nb = prev.map(_.nBuckets).getOrElse(nBuckets)
     val next = vs.lastOption.map(_._1 + 1).getOrElse(0L)
-    // fail BEFORE writing any data if v<next> already exists (committed
-    // or mid-rename) — never rely on the rename refusing (ADVICE r6)
-    val root = new Path(tableDir)
-    if (fs(spark, root).exists(new Path(root, s"v$next")))
-      throw new IllegalStateException(s"version v$next already exists in $tableDir")
+    requireFree(f, tableDir, next)
+
+    // the pruning set: distinct buckets of the batch's keys — at most
+    // min(|batch|, nBuckets) ints, config-bounded driver metadata. Read
+    // off the raw batch: the dedup below keeps one row per key, so its
+    // key set is the batch's, and the window shuffle runs only once, in
+    // the write — one pass over the deduped batch, nothing persisted.
+    val changed: Set[Int] = batch
+      .select(bucketOf(col(keyCol), nb).as("b")).distinct()
+      .collect().map(_.getInt(0)).toSet
 
     // latest-wins within the batch, tie-broken deterministically:
     // equal seq resolves upsert-over-tombstone, then by payload hash
     // (ADVICE r5: seq desc alone left equal-seq picks unspecified).
-    // Persisted: it feeds three actions (the changed-bucket collect,
-    // the merged write's upsert and tombstone branches) — unpersisted,
-    // every micro-batch would pay the batch scan + per-key window
-    // shuffle twice or more on the hot streaming path.
+    // Every winner becomes a row — tombstones too, flagged __dead, so
+    // the seq they won at stays comparable for later batches.
     val w = Window.partitionBy(keyCol).orderBy(col(seqCol).desc,
       col(deletedCol).asc, xxhash64(struct(payloadCols.map(col): _*)).asc)
-    val lastChange = batch
+    val wins = batch
       .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // every winner becomes a row — tombstones too, flagged __dead, so
-      // the seq they won at stays comparable for later batches
-      val wins = lastChange.select(col(keyCol),
-        struct(payloadCols.map(col) ++ Seq(col(seqCol),
-          col(deletedCol).as("__dead")): _*).as("__p"))
+      .select(col(keyCol), struct(payloadCols.map(col) ++ Seq(col(seqCol),
+        col(deletedCol).as("__dead")): _*).as("__p"))
 
-      // the pruning set: distinct buckets of changed keys — at most
-      // min(|batch|, nBuckets) ints, config-bounded driver metadata
-      val changed: Set[Int] = lastChange
-        .select(bucketOf(col(keyCol), nb).as("b")).distinct()
-        .collect().map(_.getInt(0)).toSet
+    // base = ONLY the changed buckets of the previous version
+    val baseDirs = prev.toSeq.flatMap(_.buckets.collect {
+      case (b, dir) if changed(b) => dir
+    })
+    val merged = if (prev.isEmpty || baseDirs.isEmpty) {
+      wins.select(col(keyCol) +: storedCols.map(c => col("__p").getField(c).as(c)): _*)
+    } else {
+      val base = spark.read.schema(prev.get.schema).parquet(baseDirs.distinct: _*)
+        .select(col(keyCol).as("__bk"), struct(storedCols.map(col): _*).as("__b"))
+      // x169's full-outer coalesce, struct-packed to stay generic —
+      // except the winner is chosen by SEQ, not by presence: higher
+      // seq wins regardless of kind (upsert or tombstone), equal seq
+      // prefers the upsert (the in-batch tie-break), equal kind
+      // prefers the batch (idempotent for exact replays)
+      base.join(wins, col("__bk") === col(keyCol), "full_outer")
+        .select(coalesce(col(keyCol), col("__bk")).as(keyCol),
+                when(col("__p").isNull, col("__b"))
+                  .when(col("__b").isNull, col("__p"))
+                  .when(col("__p").getField(seqCol) > col("__b").getField(seqCol),
+                    col("__p"))
+                  .when(col("__p").getField(seqCol) < col("__b").getField(seqCol),
+                    col("__b"))
+                  .when(!col("__p").getField("__dead") ||
+                    col("__b").getField("__dead"), col("__p"))
+                  .otherwise(col("__b")).as("__m"))
+        .select(col(keyCol) +: storedCols.map(c => col("__m").getField(c).as(c)): _*)
+    }
 
-      // base = ONLY the changed buckets of the previous version
-      val baseDirs = prev.toSeq.flatMap(_.buckets.collect {
-        case (b, dir) if changed(b) => dir
-      })
-      val merged = if (prev.isEmpty || baseDirs.isEmpty) {
-        wins.select(col(keyCol) +: storedCols.map(c => col("__p").getField(c).as(c)): _*)
-      } else {
-        val base = spark.read.schema(prev.get.schema).parquet(baseDirs.distinct: _*)
-          .select(col(keyCol).as("__bk"), struct(storedCols.map(col): _*).as("__b"))
-        // x169's full-outer coalesce, struct-packed to stay generic —
-        // except the winner is chosen by SEQ, not by presence: higher
-        // seq wins regardless of kind (upsert or tombstone), equal seq
-        // prefers the upsert (the in-batch tie-break), equal kind
-        // prefers the batch (idempotent for exact replays)
-        base.join(wins, col("__bk") === col(keyCol), "full_outer")
-          .select(coalesce(col(keyCol), col("__bk")).as(keyCol),
-                  when(col("__p").isNull, col("__b"))
-                    .when(col("__b").isNull, col("__p"))
-                    .when(col("__p").getField(seqCol) > col("__b").getField(seqCol),
-                      col("__p"))
-                    .when(col("__p").getField(seqCol) < col("__b").getField(seqCol),
-                      col("__b"))
-                    .when(!col("__p").getField("__dead") ||
-                      col("__b").getField("__dead"), col("__p"))
-                    .otherwise(col("__b")).as("__m"))
-          .select(col(keyCol) +: storedCols.map(c => col("__m").getField(c).as(c)): _*)
-      }
-
-      // unique data dir per attempt: no writer (racer or replayer) can
-      // ever overwrite files an existing manifest references (ADVICE r6)
-      val dataDir = s"$tableDir/data/v$next-${java.util.UUID.randomUUID().toString.take(8)}"
-      merged.withColumn("b", bucketOf(col(keyCol), nb))
-        .write.partitionBy("b").parquet(dataDir)
-
-      // rewritten buckets = the b=<x> dirs the write actually produced
-      // (tombstones are retained rows, so every changed bucket persists)
-      val dd = new Path(dataDir)
-      val f = fs(spark, dd)
-      val written: Map[Int, String] = f.listStatus(dd).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("b="))
-        .map(s => s.getPath.getName.drop(2).toInt -> s.getPath.toString).toMap
-
-      val carried = prev.map(_.buckets.filterNot { case (b, _) => changed(b) })
-        .getOrElse(Map.empty)
-      val schema = org.apache.spark.sql.types.StructType(
-        merged.schema.fields)
-      commit(spark, tableDir, next, Commit(schema, nb, carried ++ written), txnId)
-      next
-    } finally lastChange.unpersist()
+    // rewritten buckets = the b=<x> dirs the write actually produced
+    // (tombstones are retained rows, so every changed bucket persists)
+    val written = writeBuckets(f, tableDir, next, merged, keyCol, nb)
+    val carried = prev.map(_.buckets.filterNot { case (b, _) => changed(b) })
+      .getOrElse(Map.empty)
+    commit(f, tableDir, next, Commit(merged.schema, nb, carried ++ written), txnId)
+    next
   }
 
   /** Tombstone retention compaction — the purge leg of the
@@ -404,21 +424,17 @@ object CdcStream {
                         keyCol: String, belowSeq: Long,
                         seqCol: String = "seq",
                         txnId: Option[String] = None): Long = {
-    val vs = versionDirs(spark, tableDir)
+    val f = fs(spark, tableDir)
+    val vs = versionDirs(f, tableDir)
     require(vs.nonEmpty, s"compactTombstones: no committed version in $tableDir")
-    val alreadyApplied = for {
-      t <- txnId; (n, p) <- vs.lastOption
-      if readTxn(spark, p).contains(t)
-    } yield n
+    val alreadyApplied = replayed(f, vs, txnId)
     if (alreadyApplied.isDefined) return alreadyApplied.get
     val (vn, vp) = vs.last
-    val prev = readManifest(spark, vp)
+    val prev = readManifest(f, vp)
     require(prev.schema.fieldNames.contains("__dead"),
       s"table $tableDir was written by a pre-tombstone-retention format")
     val next = vn + 1
-    val root = new Path(tableDir)
-    if (fs(spark, root).exists(new Path(root, s"v$next")))
-      throw new IllegalStateException(s"version v$next already exists in $tableDir")
+    requireFree(f, tableDir, next)
 
     val purgeable = col("__dead") && col(seqCol) < lit(belowSeq)
     // buckets to rewrite: recomputed from the key (the layout's own
@@ -432,16 +448,9 @@ object CdcStream {
     val hitDirs = prev.buckets.collect { case (b, d) if hit(b) => d }.toSeq
     val kept = spark.read.schema(prev.schema).parquet(hitDirs.distinct: _*)
       .where(!purgeable)
-    val dataDir = s"$tableDir/data/v$next-${java.util.UUID.randomUUID().toString.take(8)}"
-    kept.withColumn("b", bucketOf(col(keyCol), prev.nBuckets))
-      .write.partitionBy("b").parquet(dataDir)
-    val dd = new Path(dataDir)
-    val f = fs(spark, dd)
-    val written: Map[Int, String] = f.listStatus(dd).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("b="))
-      .map(s => s.getPath.getName.drop(2).toInt -> s.getPath.toString).toMap
+    val written = writeBuckets(f, tableDir, next, kept, keyCol, prev.nBuckets)
     val carried = prev.buckets.filterNot { case (b, _) => hit(b) }
-    commit(spark, tableDir, next,
+    commit(f, tableDir, next,
       Commit(prev.schema, prev.nBuckets, carried ++ written), txnId)
     next
   }
@@ -500,18 +509,18 @@ object CdcStream {
              graceMs: Long = 15L * 60 * 1000): VacuumStats = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val root = new Path(tableDir)
-    val f = fs(spark, root)
+    val f = fs(spark, tableDir)
     if (!f.exists(root)) return VacuumStats(0, 0, 0, 0)
     val cutoff = System.currentTimeMillis() - graceMs
-    val vs = versionDirs(spark, tableDir)
+    val vs = versionDirs(f, tableDir)
     val (drop, keep) = vs.splitAt(math.max(0, vs.size - keepLast))
     val referenced: Set[String] =
-      keep.flatMap { case (_, p) => readManifest(spark, p).buckets.values }.toSet
+      keep.flatMap { case (_, p) => readManifest(f, p).buckets.values }.toSet
     // dirs the DROPPED manifests referenced: committed-then-expired, so
     // known-dead — no grace needed (an in-flight writer's dir can never
     // appear here; it is unreferenced by definition until its commit)
     val deadReferenced: Set[String] =
-      drop.flatMap { case (_, p) => readManifest(spark, p).buckets.values }
+      drop.flatMap { case (_, p) => readManifest(f, p).buckets.values }
         .toSet -- referenced
 
     // 1. prune expired manifests — after this no reader can reach them

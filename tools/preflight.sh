@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Preflight gate (VERDICT r3 #2): a red build must not ship silently.
-# Runs the full ScalaTest+ScalaCheck suite, the sf0.01 correctness dump,
-# the DuckDB oracle compare, and a source leak sweep, then writes
+# Runs the full ScalaTest+ScalaCheck suite, the benchmark's own unit
+# tests, the sf0.01 correctness dump, the DuckDB oracle compare, and a
+# source leak sweep, then writes
 # PREFLIGHT.json with every component's outcome and a single "green"
 # verdict. Exit code is nonzero when any component is red, so callers
 # (the end-of-round snapshot, a pre-commit hook) can gate on it.
@@ -18,6 +19,19 @@ tests_line=$(grep -E "^\[info\] Tests: " /tmp/preflight_test.log | tail -1 \
   | sed 's/^\[info\] //')
 props_line=$(grep -E "^\[info\] Passed: Total" /tmp/preflight_test.log | tail -1 \
   | sed 's/^\[info\] //')
+
+echo "[preflight] perfbench unit tests ..."
+# The benchmark compiles the program's library surfaces (CdcStream,
+# Catalog, Pipeline, LogLines) into its own build; its listener test
+# builds it, so a signature change that would break the benchmark turns
+# this red. A skipped test (no sbt or SPARK_HOME) is red too: then the
+# build was not checked.
+python3 -m unittest discover -s perfbench -p 'test_*.py' \
+  >/tmp/preflight_perfbench.log 2>&1
+perfbench_rc=$?
+perfbench_line=$(grep -E "^Ran [0-9]+ test" /tmp/preflight_perfbench.log | tail -1)
+perfbench_status=$(grep -E "^(OK|FAILED)" /tmp/preflight_perfbench.log | tail -1)
+if grep -qE "^OK \(.*skipped" /tmp/preflight_perfbench.log; then perfbench_rc=1; fi
 
 echo "[preflight] Verify sf0.01 ..."
 rm -rf /tmp/preflight_verify
@@ -46,8 +60,10 @@ leak_hits=$(grep -RInE \
   -P 2>/dev/null | grep -v 'localhost' | wc -l)
 
 green=false
-if [ "$test_rc" = 0 ] && [ "$verify_rc" = 0 ] && [ "$verify_errs" = 0 ] \
-   && [ "$oracle_rc" = 0 ] && [ "$leak_hits" = 0 ]; then green=true; fi
+if [ "$test_rc" = 0 ] && [ "$perfbench_rc" = 0 ] && [ "$verify_rc" = 0 ] \
+   && [ "$verify_errs" = 0 ] && [ "$oracle_rc" = 0 ] && [ "$leak_hits" = 0 ]; then
+  green=true
+fi
 
 cat > PREFLIGHT.json <<EOF
 {
@@ -55,6 +71,7 @@ cat > PREFLIGHT.json <<EOF
   "finished": "$(date -u +%Y-%m-%dT%H:%M:%SZ)",
   "git_head": "$(git rev-parse --short HEAD)",
   "sbt_test": {"rc": $test_rc, "summary": "$tests_line", "scalacheck": "$props_line"},
+  "perfbench_unittest": {"rc": $perfbench_rc, "summary": "$perfbench_line; $perfbench_status"},
   "verify_sf001": {"rc": $verify_rc, "query_errors": $verify_errs},
   "oracle_sql_sha256": "$oracle_sql_sha256",
   "oracle": {"rc": $oracle_rc, "summary": "$oracle_line"},
@@ -62,7 +79,7 @@ cat > PREFLIGHT.json <<EOF
   "green": $green
 }
 EOF
-echo "[preflight] green=$green  ($tests_line; $oracle_line; leaks=$leak_hits)"
+echo "[preflight] green=$green  ($tests_line; perfbench rc=$perfbench_rc; $oracle_line; leaks=$leak_hits)"
 cat PREFLIGHT.json
 
 # --commit: land the artifact as its own commit immediately, so the
