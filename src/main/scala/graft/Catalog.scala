@@ -136,8 +136,8 @@ object Catalog {
               df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
             // ts arrives as BIGINT nanos under nanosAsLong; floor-truncate
             // to µs (matches DuckDB's ns→µs conversion, SURVEY.md §5.35).
-            // Re-materialized corpora (ScaleSoak) store µs timestamps
-            // directly and skip the conversion.
+            // Re-materialized corpora (ScaleSoak.buildFull) store µs
+            // timestamps directly and skip the conversion.
             df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
           else df
         // normalize timezone-naive timestamp columns (TIMESTAMP_NTZ) to

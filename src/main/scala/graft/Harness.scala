@@ -2,15 +2,16 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** The measurement protocol every timed main shares: one core count, one
   * session factory, one timer, one listener. [[Bench]], [[BenchStream]],
-  * [[Verify]], [[ScaleSoak]], [[Rehearsal]], [[Explain]] and
-  * [[Pipeline]]'s demo main are its callers; each passes only the config
-  * it deliberately differs in, so a protocol decision (time zone, UI,
-  * master width) is made here once instead of drifting per main.
+  * [[Verify]], [[ScaleSoak]], [[Explain]] and [[Pipeline]]'s demo main
+  * are its callers; each passes only the config it deliberately differs
+  * in, so a protocol decision (time zone, UI, master width) is made here
+  * once instead of drifting per main.
   */
 object Harness {
 
@@ -89,24 +90,32 @@ object Harness {
     System.gc(); Thread.sleep(250); System.gc()
   }
 
-  /** Cumulative engine counters; `-` gives the delta over a window. */
+  /** Cumulative engine counters; `-` gives the delta over a window.
+    * `maxTaskMs` is a running maximum, not a sum: a delta keeps the later
+    * snapshot's, so it is the window's own only on a listener registered
+    * for that window. */
   final case class Counts(stages: Int, tasks: Long, jobs: Int,
-                          executorRunMs: Long, shuffleWriteBytes: Long) {
+                          executorRunMs: Long, shuffleWriteBytes: Long,
+                          spillBytes: Long, maxTaskMs: Long) {
     def -(o: Counts): Counts = Counts(stages - o.stages, tasks - o.tasks,
       jobs - o.jobs, executorRunMs - o.executorRunMs,
-      shuffleWriteBytes - o.shuffleWriteBytes)
+      shuffleWriteBytes - o.shuffleWriteBytes, spillBytes - o.spillBytes,
+      maxTaskMs)
   }
 
-  /** The one listener: executed stages, their tasks, finished jobs, and
-    * the stages' summed executor run time and shuffle write bytes.
-    * Skipped stages never complete, so a memoized plan shows up as a
-    * LOWER stage count (SCALE.md §36). */
+  /** The one listener: executed stages, their tasks, finished jobs, the
+    * stages' summed executor run time, shuffle write and disk spill
+    * bytes, and the longest task's executor run time. Skipped stages
+    * never complete, so a memoized plan shows up as a LOWER stage count
+    * (SCALE.md §36). */
   final class Listener extends SparkListener {
     private val stages = new AtomicInteger(0)
     private val tasks = new AtomicLong(0L)
     private val jobs = new AtomicInteger(0)
     private val runMs = new AtomicLong(0L)
     private val shuffleBytes = new AtomicLong(0L)
+    private val spill = new AtomicLong(0L)
+    private val maxTask = new AtomicLong(0L)
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       stages.incrementAndGet()
       tasks.addAndGet(e.stageInfo.numTasks.toLong)
@@ -114,11 +123,15 @@ object Harness {
       if (tm != null) {
         runMs.addAndGet(tm.executorRunTime)
         shuffleBytes.addAndGet(tm.shuffleWriteMetrics.bytesWritten)
+        spill.addAndGet(tm.diskBytesSpilled)
       }
     }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (e.taskMetrics != null)
+        maxTask.accumulateAndGet(e.taskMetrics.executorRunTime, math.max(_, _))
     override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.incrementAndGet()
     def snapshot: Counts = Counts(stages.get, tasks.get, jobs.get,
-      runMs.get, shuffleBytes.get)
+      runMs.get, shuffleBytes.get, spill.get, maxTask.get)
     /** Listener bus is async: wait until the counters are unchanged for
       * `stableMs` (cap 5 s) before trusting a read — a fixed sleep would
       * be a race, not a protocol. */

@@ -6166,7 +6166,7 @@ object Queries {
     // division, so both engines are bit-identical regardless of join
     // order. Overflow bound: scores ≤ 1e6 so per-node sums ≤ 1e6·Σw and
     // the 1e6-normalizer product stays under 2^63 while Σw ≤ 9.2e6 per
-    // node — asserted per corpus by the r11tier soak (SCALE.md §29),
+    // node — held on the sf0.1 and 10× corpora (SCALE.md §29),
     // and Graph.perMilleWeights pre-shrinks weights for graphs outside
     // it. (Sessions run Spark 4's default ANSI mode, so an overflow
     // raises rather than wraps — but generically; the native tier's

@@ -69,14 +69,14 @@ object ConnectedComponents {
     * identical labels, none of the per-round job+checkpoint overhead
     * that made the closure the fixed cost of x111/x177/x331 at bench
     * scale (r13: ~1-4 s per op of pure scheduling). Larger graphs fall
-    * through to [[runWithIters]], paying only the aborted limit-scan. */
+    * through to [[propagate]], paying only the aborted limit-scan. */
   def run(edges: DataFrame, maxIters: Int = 50,
           smallGraphBudget: Int = SmallGraphEdgeBudget): DataFrame = {
     val e = edges.toDF("s", "d")
       .select(col("s").cast("long").as("s"), col("d").cast("long").as("d"))
       .where(col("s").isNotNull && col("d").isNotNull)
     val probe = e.limit(smallGraphBudget + 1).collect()
-    if (probe.length > smallGraphBudget) runWithIters(e, maxIters)._1
+    if (probe.length > smallGraphBudget) propagate(e, maxIters)
     else {
       // union-by-min with path compression: a root only ever decreases,
       // so every tree's root IS its component's minimum vertex id —
@@ -112,15 +112,11 @@ object ConnectedComponents {
     }
   }
 
-  /** [[run]] plus the number of label-propagation rounds executed until
-    * the Σlabel fixpoint — what ScaleSoak asserts stays O(log) in the
-    * largest component's diameter at the 10× point. */
-  def runWithIters(edges: DataFrame, maxIters: Int = 50): (DataFrame, Int) = {
-    // Same null contract as [[run]] for direct callers: a null endpoint
-    // row is dropped, never propagated into the label lattice (null
-    // would poison min("label") groups under SQL null-last semantics).
-    val e = edges.toDF("s", "d")
-      .where(col("s").isNotNull && col("d").isNotNull)
+  /** [[run]]'s distributed path over its null-free (s, d) edges: label
+    * propagation with pointer jumping until the Σlabel fixpoint, which
+    * measured O(log) rounds in the largest component's diameter at the
+    * 10× point (SCALE.md §14). */
+  private def propagate(e: DataFrame, maxIters: Int): DataFrame = {
     // Both orientations, so "neighbors of v" is one equi-join on s.
     val und = e.union(e.select(col("d"), col("s"))).localCheckpoint(true)
 
@@ -155,7 +151,7 @@ object ConnectedComponents {
       labels = next
       iter += 1
     }
-    (labels, iter)
+    labels
   }
 
   /** Cluster census over `run`: (id, label, csize). */

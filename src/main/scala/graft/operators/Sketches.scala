@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * (x261/x266/x301) stay hash-checkable at every contract SF (where
   * the flag is structurally 1). The over-capacity path is driven by
   * InvariantsSpec on >capacity synthetic corpora (flag drops to 0,
-  * error bounds asserted) and rehearsed at 100× keyspace in Rehearsal.
+  * error bounds asserted); SCALE.md §20 records it at 100× keyspace.
   *
   * One builder per shape, shared verbatim by the contract entry and the
   * specs — the dual-mode claim is structural, not by review.

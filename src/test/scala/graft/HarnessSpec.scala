@@ -34,6 +34,8 @@ class HarnessSpec extends SparkSpec {
       val d = l.quiesce() - c0
       assert(d.stages == 2, s"$d")
       assert(d.jobs >= 1 && d.tasks >= 9, s"$d")
+      assert(d.maxTaskMs > 0 && d.maxTaskMs <= d.executorRunMs, s"$d")
+      assert(d.spillBytes == 0L, s"$d")
     } finally spark.sparkContext.removeSparkListener(l)
     assert(Harness.stageMs(spark, reps = 3) > 0.0)
   }
