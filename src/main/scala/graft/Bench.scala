@@ -63,22 +63,22 @@ object Bench {
     * together, with the re-freeze argued in BASELINE.md. */
   val ProtocolQueryCount = 46
 
+  /** Shuffle fan-out sized to the DATA VOLUME, exactly as AQE would at
+    * runtime: the suite's largest shuffle payload at sf0.1 is
+    * single-digit MB, below AQE's 64 MB advisory partition size, so the
+    * adaptive engine would coalesce every exchange to ONE partition —
+    * the static protocol pins that same choice. Spark's
+    * RangePartitioner only runs its boundary-sampling job when
+    * numPartitions > 1, so one partition also deletes one job (a full
+    * child re-execution) from every ORDER BY query (SCALE.md §37).
+    * Measured 3-rep medians at sf0.1: 6.70 s (1) vs 7.47/7.27/7.23 s
+    * (2/4/8). On a real cluster this is sized to volume; AQE does it
+    * adaptively (the BENCH_r14_aqe.json row). */
+  private val Shuffle = 1
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Harness.cpus
-    // Shuffle fan-out sized to the DATA VOLUME, exactly as AQE would at
-    // runtime: the suite's largest shuffle payload at sf0.1 is
-    // single-digit MB, below AQE's 64 MB advisory partition size, so
-    // the adaptive engine would coalesce every exchange to ONE
-    // partition — the static protocol pins that same choice. Bonus
-    // that settled the r13 shuffle question (SCALE.md §37): Spark's
-    // RangePartitioner only runs its boundary-sampling job when
-    // numPartitions > 1, so shuffle=1 also deletes one job (a full
-    // child re-execution!) from every ORDER BY query. Measured 3-rep
-    // medians at sf0.1: 6.70 s (shuffle=1) vs 7.47/7.27/7.23 s
-    // (2/4/8). On a real cluster this is sized to volume; AQE does it
-    // adaptively (the BENCH_r14_aqe.json row).
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "1")
     // AQE is the engine's default (and the right call at cluster scale:
     // runtime coalescing, skew splits), but each adaptive execution
     // re-optimizes at every shuffle materialization — measured +0.5-0.7s
@@ -94,7 +94,7 @@ object Bench {
     // the driver's gate run leaves this unset.
     val threads = sys.env.getOrElse("SPARK_GRAFT_BENCH_THREADS", "1").toInt
     val spark = Harness.session("graft-bench",
-      "spark.sql.shuffle.partitions" -> shuffle,
+      "spark.sql.shuffle.partitions" -> Shuffle.toString,
       "spark.sql.adaptive.enabled" -> adaptive,
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
       // Single-file tables: without a smaller split size each scan is

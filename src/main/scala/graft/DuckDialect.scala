@@ -10,6 +10,11 @@ import scala.util.matching.Regex
   * (`Queries.q(name, spark, oracle)`). Quoted string literals pass
   * through byte-for-byte: they are masked before any rule runs.
   *
+  * Spark plan hints carry no meaning for a result, so the rules drop
+  * them: a hinted `(SELECT cols FROM t)` subquery reads as `t`, and a
+  * bare hint comment goes. A hint thus stays in the one text, and no
+  * oracle depends on its width (`SPARK_GRAFT_CPUS`).
+  *
   * Each rule folds at least one inventory entry; add a rule only with
   * the entry it folds. DuckDialectSpec checks every rule and that no
   * two-text entry is one the rewriter already reproduces; ContractSpec
@@ -60,7 +65,27 @@ object DuckDialect {
 
   private val hexPrefix = """(?s)substr\(.*,\s*\d+,\s*8\)""".r
 
-  private val rules: Seq[String => String] =
+  /** `transform(sequence(1, size(w)-K), i -> concat_ws(sep, slice(w, i, W)))`,
+    * the word shingles of `w`; rewritten only when the width W is K+1. */
+  private val shingles = ("""\btransform\(sequence\(1, size\((\w+)\)-(\d+)\), (\w+) -> """ +
+    """concat_ws\((""" + Mask + """), slice\(\1, \3, (\d+)\)\)\)""").r
+
+  private val rules: Seq[String => String] = Seq[String => String](
+    // (SELECT /*+ hint */ cols FROM t) → t, then any bare hint comment
+    // is dropped: Spark plan hints carry no meaning for the result
+    regex("""\(SELECT /\*\+ [^*]*\*/ \w+(?:, \w+)* FROM (\w+)\)""", "$1"),
+    regex("""/\*\+ [^*]*\*/ """, ""),
+    // the shingle comprehension → DuckDB's list comprehension over l[i:j]
+    s => shingles.replaceSomeIn(s, m => {
+      val Seq(w, k, i, sep, width) = m.subgroups
+      Option.when(width.toInt == k.toInt + 1)(Regex.quoteReplacement(
+        s"[array_to_string($w[$i:$i+$k],$sep) FOR $i IN range(1, len($w)-${k.toInt - 1})]"))
+    }),
+    // FROM VALUES (…), … AS t(c…) → FROM (VALUES (…), …) AS t(c…)
+    regex("""\bFROM VALUES ((?:\([^()]*\),?\s*)+?) AS (\w+\()""", "FROM (VALUES $1) AS $2"),
+    // listagg(e, s) WITHIN GROUP (ORDER BY k) → string_agg(e, s ORDER BY k)
+    regex("""\blistagg\(((?:[^()]|\([^()]*\))*)\) WITHIN GROUP \(ORDER BY ([^()]*)\)""",
+      "string_agg($1 ORDER BY $2)")) ++
     renames.map { case (p, r) => regex(p, Regex.quoteReplacement(r)) } ++ Seq(
       // percentile_disc(p) WITHIN GROUP (ORDER BY e) → quantile_disc(e, p),
       // for a parenthesis-free ordering expression
@@ -74,6 +99,9 @@ object DuckDialect {
       call("conv") {
         case Seq(h, b, t) if hexPrefix.matches(h.trim) && b.trim == "16" && t.trim == "10" =>
           s"('0x'||${h.trim})"
+      },
+      call("cosine_sim") { case Seq(a, b) =>
+        s"cast(list_cosine_similarity(${a.trim}, ${b.trim}) AS DOUBLE)"
       })
 
   /** Rewrites each call `name(args)` whose top-level argument list `f`

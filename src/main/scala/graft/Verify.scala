@@ -17,16 +17,13 @@ object Verify {
     // queries without a full-inventory run (the driver never passes it)
     val only: Set[String] = args.find(_.startsWith("only="))
       .map(_.stripPrefix("only=").split(",").toSet).getOrElse(Set.empty)
-    // Shuffle fan-out defaults to core count (the driver-gate protocol),
-    // but pair-explosion queries at soak scale need partitions ≫ cores so
-    // per-task hash state fits execution memory — the same knob a real
-    // cluster turns (observed: x80 at the 10x corpus needs ~256).
+    // Shuffle fan-out is the core count (the correctness-gate protocol): one
+    // partition per core keeps every core busy on the contract corpora.
     // SPARK_GRAFT_MASTER=local-cluster[2,16,4096] runs the SAME dump with
     // real executor processes, exercising cross-JVM serialization of
     // every native expression/aggregator buffer (SCALE.md §41).
     val spark = Harness.session("graft-verify",
-      "spark.sql.shuffle.partitions" ->
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", Harness.cpus.toString),
+      "spark.sql.shuffle.partitions" -> Harness.cpus.toString,
       "spark.log.level" -> "WARN")
     new java.io.File(outDir).mkdirs()
     // Quadratic exact baselines run only on the contract corpora (the
@@ -82,14 +79,18 @@ object Verify {
     // driver's json.load fail and silently zero the round's correctness.
     // The table itself is the shared JsonOut (one copy, Bench uses it too).
     def q(s: String): String = JsonOut.quote(s)
-    val json = SparkEntry.oracleSql
+    val oracles = SparkEntry.oracleSql
       .filter { case (k, _) => only.isEmpty || only(k) }
       // keep the oracle list in lockstep with the skipped baselines —
       // an oracle without a dumped result would read as a failure
       .filter { case (k, _) =>
         contractCorpus || only(k) || !Queries.exactBaselines(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = oracles.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // the fork count: declared queries whose oracle is a second,
+    // hand-kept text rather than the DuckDialect rewrite
+    val handWritten = Queries.all.count(e => e.handWritten && oracles.contains(e.name))
+    println(s"[verify] oracle texts: ${oracles.size}, hand-written: $handWritten")
     spark.stop()
   }
 }

@@ -98,4 +98,26 @@ class ScaleSoakSpec extends SparkSpec with BeforeAndAfterAll {
   test("parseArgs: an empty entry list fails") {
     rejects("--scale", "4")("no entry")
   }
+
+  /** settledHeapMb over fake post-scrub readings: (result, scrubs run). */
+  private def settle(readings: Long*): (Long, Int) = {
+    val it = readings.iterator
+    var scrubs = 0
+    val mb = ScaleSoak.settledHeapMb { () => scrubs += 1; it.next() }
+    (mb, scrubs)
+  }
+
+  test("settledHeapMb: scrubs again while the heap still falls by 5% or more") {
+    assert(settle(1122, 400, 90, 88, 70) == ((88L, 4)))
+  }
+
+  test("settledHeapMb: a drop of exactly 5% scrubs again, a smaller one stops") {
+    assert(settle(100, 95, 50, 49, 10) == ((49L, 4)))
+    assert(settle(100, 96, 10) == ((96L, 2)))
+    assert(settle(78, 78, 10) == ((78L, 2)))
+  }
+
+  test("settledHeapMb: stops after MaxScrubs while the heap is still falling") {
+    assert(settle(1000, 900, 800, 700, 600, 500, 400) == ((600L, ScaleSoak.MaxScrubs)))
+  }
 }

@@ -43,6 +43,10 @@ verify_errs=$(grep -c "^\[verify\] .* failed:" /tmp/preflight_verify.log)
 # The gate's input: a digest of the oracle texts Verify dumped, so every
 # recorded HEAD shows whether an oracle text changed.
 oracle_sql_sha256=$(sha256sum /tmp/preflight_verify/oracle_sql.json 2>/dev/null | cut -d' ' -f1)
+# The fork count Verify prints: declared queries that still keep a
+# hand-written second oracle text (recorded only; no gate reads it).
+two_text_entries=$(grep -oE "^\[verify\] oracle texts: [0-9]+, hand-written: [0-9]+" \
+  /tmp/preflight_verify.log | grep -oE "[0-9]+$" | tail -1)
 
 echo "[preflight] DuckDB oracle compare ..."
 python3 tools/oracle_check.py /root/testdata/sf0.01 /tmp/preflight_verify \
@@ -74,6 +78,7 @@ cat > PREFLIGHT.json <<EOF
   "perfbench_unittest": {"rc": $perfbench_rc, "summary": "$perfbench_line; $perfbench_status"},
   "verify_sf001": {"rc": $verify_rc, "query_errors": $verify_errs},
   "oracle_sql_sha256": "$oracle_sql_sha256",
+  "two_text_entries": ${two_text_entries:-null},
   "oracle": {"rc": $oracle_rc, "summary": "$oracle_line"},
   "leak_hits": $leak_hits,
   "green": $green
