@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the declared queries on
   * SPARK_GRAFT_SF_DIR, prints ONE full JSON line
   * {"metric":...,"value":N,"unit":"sec","queries":{...},"sf":...}
@@ -16,16 +14,14 @@ import org.apache.spark.sql.SparkSession
   * The artifact also carries measurement-integrity fields (VERDICT r7
   * #1 and #6):
   *  - `duckdb_paired_total` / `paired_ratio`: the DuckDB suite
-  *    co-measured in THIS container. Since r16 the primary pairing is
-  *    INTERLEAVED per query (tools/paired_duck.py, `paired_mode:
-  *    "interleaved"`, per-query medians in `duckdb_queries`): each
-  *    query's oracle is timed immediately after that query's Spark
-  *    reps, so a load spike inside the Spark window moves both engines
-  *    together — the pre/post bracket passes (tools/rebaseline.py, the
-  *    r7–r15 protocol) stay in the artifact as the historical series
-  *    and the fallback. BASELINE.md's frozen numbers stay as the
-  *    historical anchor. Null when the driver-side python/duckdb is
-  *    unavailable.
+  *    co-measured in THIS container, INTERLEAVED per query
+  *    (tools/paired_duck.py, `paired_mode: "interleaved"`, per-query
+  *    medians in `duckdb_queries`): each query's oracle is timed
+  *    immediately after that query's Spark reps, so a load spike inside
+  *    the Spark window moves both engines together. BASELINE.md's
+  *    frozen numbers stay as the historical anchor. When python/duckdb
+  *    is unavailable or the control misses a name, the pair is null
+  *    (`paired_mode: "none"`) and so is the gate.
   *  - `floor_ms`: the task-launch floor — median wall time of a 32-task
   *    no-op job (range→count, no IO) on the warm session. Per-query
   *    times below ~2× this floor (q01/q29/q37's class) measure the
@@ -38,7 +34,7 @@ object Bench {
 
   /** The PROTOCOL's executed-stage count for the 46-query gate suite
     * (shuffle=1, AQE off — BASELINE.md "Gate", cross-checked against
-    * STAGE_AUDIT_r14.json and pinned across every r14 closing run).
+    * history/STAGE_AUDIT_r14.json and pinned across every r14 closing run).
     * FROZEN into the gate bound rather than fed from the run under
     * test: pricing the bound by the live count let a plan regression
     * that ADDS stages (a lost broadcast, a duplicated exchange) inflate
@@ -63,63 +59,42 @@ object Bench {
     * together, with the re-freeze argued in BASELINE.md. */
   val ProtocolQueryCount = 46
 
-  /** Shuffle fan-out sized to the DATA VOLUME, exactly as AQE would at
-    * runtime: the suite's largest shuffle payload at sf0.1 is
-    * single-digit MB, below AQE's 64 MB advisory partition size, so the
-    * adaptive engine would coalesce every exchange to ONE partition —
-    * the static protocol pins that same choice. Spark's
-    * RangePartitioner only runs its boundary-sampling job when
-    * numPartitions > 1, so one partition also deletes one job (a full
-    * child re-execution) from every ORDER BY query (SCALE.md §37).
-    * Measured 3-rep medians at sf0.1: 6.70 s (1) vs 7.47/7.27/7.23 s
-    * (2/4/8). On a real cluster this is sized to volume; AQE does it
-    * adaptively (the BENCH_r14_aqe.json row). */
-  private val Shuffle = 1
+  /** The protocol's session settings (BASELINE.md), applied over
+    * [[Harness.BaseConf]]. perfbench's `session()` keeps a copy of
+    * them; ContractSpec fails when the two drift apart.
+    *  - One shuffle partition: fan-out sized to the DATA VOLUME, exactly
+    *    as AQE would at runtime — the suite's largest shuffle payload at
+    *    sf0.1 is single-digit MB, below AQE's 64 MB advisory partition
+    *    size, so the adaptive engine would coalesce every exchange to ONE
+    *    partition. Spark's RangePartitioner only runs its
+    *    boundary-sampling job when numPartitions > 1, so one partition
+    *    also deletes one job (a full child re-execution) from every
+    *    ORDER BY query (SCALE.md §37). Measured 3-rep medians at sf0.1:
+    *    6.70 s (1) vs 7.47/7.27/7.23 s (2/4/8).
+    *  - Static plans (AQE off): AQE is the engine's default and the
+    *    right call at cluster scale, but each adaptive execution
+    *    re-optimizes at every shuffle materialization — measured
+    *    +0.5–0.7 s across the 46-query suite at sf0.1 — and its stage
+    *    counts are runtime-adaptive, while the gate prices a frozen
+    *    static count ([[ProtocolStages]]).
+    *  - 4 MB file splits: without them each single-file table scans in
+    *    ONE task regardless of cores (row-group granularity bounds the
+    *    fan-out).
+    *  - A 30 s periodic GC keeps the ContextCleaner fed DURING long ops
+    *    (history/OPTIMIZATION_r18.md §8b): dead broadcast/shuffle blocks
+    *    are freed only after a GC enqueues their weak refs, and the
+    *    engine default (30 min) lets a whole run age without one.
+    *    [[Harness.scrub]] handles the between-ops debris. */
+  val ProtocolConf: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> "1",
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.files.maxPartitionBytes" -> "4m",
+    "spark.cleaner.periodicGC.interval" -> "30s")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Harness.cpus
-    // AQE is the engine's default (and the right call at cluster scale:
-    // runtime coalescing, skew splits), but each adaptive execution
-    // re-optimizes at every shuffle materialization — measured +0.5-0.7s
-    // across the 46-query suite at sf0.1 where shuffles are single-digit
-    // MB. The warm-suite BASELINE.md protocol measures steady-state
-    // execution, so bench pins static plans. (suite: AQE on ≈1.9s,
-    // off+shuffle4 ≈1.21s vs DuckDB 1.19s.)
-    val adaptive = sys.env.getOrElse("SPARK_GRAFT_AQE", "false")
-    // Concurrent-submission mode (VERDICT r13 #5): N > 1 runs the timed
-    // suite across N client threads sharing this session — the real
-    // deployment shape for an analytics suite, and the lever that
-    // amortizes the per-stage launch floor across queries. Non-gating:
-    // the driver's gate run leaves this unset.
-    val threads = sys.env.getOrElse("SPARK_GRAFT_BENCH_THREADS", "1").toInt
-    val spark = Harness.session("graft-bench",
-      "spark.sql.shuffle.partitions" -> Shuffle.toString,
-      "spark.sql.adaptive.enabled" -> adaptive,
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
-      // Single-file tables: without a smaller split size each scan is
-      // ONE task regardless of cores — split small so parquet decode
-      // parallelizes (row-group granularity bounds the fan-out).
-      "spark.sql.files.maxPartitionBytes" -> "4m",
-      // Keep the ContextCleaner fed DURING long ops too (r18b, §8b of
-      // OPTIMIZATION_r18.md): dead broadcast/shuffle blocks are only
-      // freed after a GC enqueues their weak refs, and the engine
-      // default (30 min) lets a whole bench run age without one. 30 s
-      // matches the single_rep budget; Harness.scrub handles the
-      // between-ops debris deterministically.
-      "spark.cleaner.periodicGC.interval" -> "30s",
-      // FAIR scheduling only matters when client threads submit jobs
-      // concurrently: FIFO would let one query's stages starve the rest
-      // and inflate tail latency for no throughput gain.
-      "spark.scheduler.mode" -> (if (threads > 1) "FAIR" else "FIFO"))
-    // Executed-stage accounting for the floor-adjusted gate (BASELINE.md
-    // "Gate" section; SCALE.md §37): the artifact carries every term of
-    // `suite ≤ 2 × (paired + total_stages × stage_ms)` co-measured in
-    // the same process — stage counts come from the Harness listener
-    // around the timed reps, stage_ms from Harness.stageMs's 2-stage
-    // probe. Sequential runs only: in concurrent mode the interleaving
-    // makes per-query attribution meaningless.
-    val countStages = threads <= 1
+    val spark = Harness.session("graft-bench", ProtocolConf: _*)
     // Timed runs must execute the WHOLE plan every rep: the memoized
     // DataFrame's RDD lineage lets Spark skip already-computed shuffle
     // map stages on resubmission, which silently turned per-query
@@ -132,8 +107,8 @@ object Bench {
     // Bench covers exactly the BASELINE.md suite (q01-q46); extension
     // operators (x47+) are correctness-gated via Verify but not part of
     // the baseline comparison. SPARK_GRAFT_BENCH_SET=x times the
-    // extension inventory instead (artifact BENCH_r04_xops.json tracks
-    // the LLM-pipeline operators' cost at sf0.1).
+    // extension inventory instead (artifact history/BENCH_r04_xops.json
+    // tracks the LLM-pipeline operators' cost at sf0.1).
     val prefix = sys.env.getOrElse("SPARK_GRAFT_BENCH_SET", "q")
     val queries = SparkEntry.queries // build the inventory map ONCE
     // r18 (VERDICT r17 #2, additions-only): a comma-separated value is a
@@ -145,12 +120,12 @@ object Bench {
     val names = queries.keys.toSeq
       .filter(n => prefixes.exists(n.startsWith)).sorted
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    // a failing query is recorded (thread-safe: conc mode) and reads -1
+    // a failing query is recorded and reads -1
     def guarded(name: String)(t: => Double): Double =
       try t
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        failed.synchronized { failed += name }
+        failed += name
         -1.0
       }
     def once(name: String): Double = {
@@ -162,7 +137,7 @@ object Bench {
       guarded(name)(Harness.median3(f(spark, sfDir).collect()).median)
     }
     // Warm-up ×2: JIT, codegen cache, parquet footers, broadcast
-    // relations, AQE final plans (second pass runs fully warm, narrowing
+    // relations (the second pass runs fully warm, narrowing
     // run-to-run variance of the timed medians). Cache is cleared per
     // NAME (not per rep): the persist-heavy extension operators register
     // a cache entry per canonicalized plan, and letting ~100 of them
@@ -188,42 +163,20 @@ object Bench {
     // bound's co-measured constant — see Harness.stageMs for why this,
     // not floor_ms, prices a real stage boundary
     val stageMs = Harness.stageMs(spark)
-    // paired DuckDB pass #1: immediately before the timed Spark suite.
-    // EVERY set pairs with the q-suite control (VERDICT r12 #1): for
-    // prefix=q that is the apples-to-apples gate pair; for the
-    // extension set it is a same-process drift control (the x-oracles
-    // themselves are not pair-able — see PairedControl's scaladoc).
-    // SPARK_GRAFT_PAIRED=off skips the DuckDB control passes — ONLY for
-    // ad-hoc tuning sweeps (a dozen shuffle-matrix runs don't need two
-    // control passes each); every artifact run keeps the bracket.
-    def pairedPass(): Option[Double] =
-      if (sys.env.get("SPARK_GRAFT_PAIRED").contains("off")) None
-      else PairedControl.qControl(sfDir)
-    val duckPre = pairedPass()
-    // Interleaved per-query pairing (VERDICT r15 #2, widened to every
-    // artifact mode per VERDICT r16 #1): a long-lived warm DuckDB
-    // worker samples the control AT THE SAME INSTANTS as the timed
-    // suite instead of bracketing a ~30 s window with two ~1 s blocks
-    // (§46 proved brackets under-sample spikes inside the window).
-    // Three adjacency shapes, one worker:
-    //  - sequential q-suite: each query's oracle median-of-3 timed
-    //    immediately after that query's Spark reps (the r16 gate form);
-    //  - sequential x-set: the control names rotate round-robin, one
-    //    after each op — 300+ ops over 46 control names gives every
-    //    name ~7 samples spread across the whole window; per-name
-    //    medians sum to the interleaved control total;
-    //  - concurrent mode: one full control pass after EACH suite rep
-    //    (per-rep adjacency — per-query interleaving is meaningless
-    //    when N threads share the cores); the median pass is the
-    //    paired term.
-    // The pre/post bracket passes stay in the artifact as the
-    // historical series and the fallback when python/duckdb is absent.
-    val ctrlNames =
-      SparkEntry.queries.keys.toSeq.filter(_.startsWith("q")).sorted
-    val duckWorker =
-      if (!sys.env.get("SPARK_GRAFT_PAIRED").contains("off"))
-        PairedControl.interleaved(sfDir, ctrlNames)
-      else None
+    // Interleaved per-query pairing (VERDICT r15 #2, r16 #1): a
+    // long-lived warm DuckDB worker samples the control AT THE SAME
+    // INSTANTS as the timed suite (§46: a pre/post bracket of two ~1 s
+    // blocks under-samples spikes inside a ~30 s window). EVERY set
+    // pairs with the q-suite control (VERDICT r12 #1): for prefix=q it
+    // is the gate pair, each query's oracle median-of-3 timed right
+    // after that query's Spark reps; for any other set it is a
+    // same-process drift control (the x-oracles themselves are not
+    // pair-able — see PairedControl's scaladoc) whose names rotate
+    // round-robin, one after each op — 300+ ops over 46 control names
+    // gives every name ~7 samples spread across the whole window, and
+    // the per-name medians sum to the control total.
+    val ctrlNames = queries.keys.toSeq.filter(_.startsWith("q")).sorted
+    val duckWorker = PairedControl.interleaved(sfDir, ctrlNames)
     val duckSamples = scala.collection.mutable
       .LinkedHashMap.empty[String, scala.collection.mutable.ArrayBuffer[Double]]
     def sampleCtrl(w: PairedControl.InterleavedDuck, name: String): Unit =
@@ -233,13 +186,6 @@ object Bench {
       }
     def medianOf(b: Seq[Double]): Double = b.sorted.apply(b.length / 2)
     var ctrlIdx = 0
-    // concurrent mode: one full control pass per rep; None if the
-    // worker died mid-pass (a partial sum is not a control total)
-    def ctrlPass(w: PairedControl.InterleavedDuck): Option[Double] = {
-      val ts = ctrlNames.map(w.time)
-      if (ts.forall(_.isDefined)) Some(ts.flatten.sum) else None
-    }
-    val concControls = scala.collection.mutable.ArrayBuffer.empty[Option[Double]]
     // Heavy-op budget for non-q sets (never silent: the artifact names
     // every op it applied to in "single_rep"): once an op's repopulate
     // run exceeds 10 s, its median-of-3 would cost > 40 s of wall for a
@@ -248,77 +194,55 @@ object Bench {
     // x274 17 s — SCALE.md §36) is exactly this class.
     val heavySingleRepSec = 10.0
     val singleRep = scala.collection.mutable.LinkedHashSet.empty[String]
-    var totalStages = 0 // per-suite-execution executed stages (sequential mode)
+    var totalStages = 0 // per-suite-execution executed stages
     // Queries whose stage count was NOT rep-stable (delta % execs != 0).
     // Carried into the artifact, not just stderr: a gate built from a
     // flagged-invalid count must say so where consumers read it
     // (ADVICE r14 #4).
     val stageUnstable = scala.collection.mutable.LinkedHashSet.empty[String]
-    // Concurrent mode: the timed unit is the SUITE WALL — N threads
-    // drain one shared queue of queries, wall = last completion. Three
-    // reps, median. Per-query numbers from the median rep are recorded
-    // but are CONTENDED latencies (N queries share 32 cores), useful
-    // for spotting stragglers, not as per-query gates.
-    // Through the PUBLIC runner (VERDICT r14 #6): Bench's concurrent
-    // mode is now a caller of Pipeline.concurrent, so the artifact
-    // measures the exact surface a library user gets (per-thread FAIR
-    // pools included), not a private harness twin of it.
-    val concWalls: Seq[(Double, Map[String, Double])] =
-      if (threads <= 1) Nil
-      else (1 to 3).map { _ =>
-        val tasks = names.map(n => n -> ((_: SparkSession) => once(n)))
-        val (wall, times) =
-          Harness.timed(Pipeline.concurrent(spark, tasks, threads))
-        spark.catalog.clearCache()
-        // per-rep adjacency: the control pass runs in the same weather
-        // as the rep it follows
-        duckWorker.foreach(w => concControls += ctrlPass(w))
-        (wall, times)
-      }.sortBy(_._1)
-    val medians: Seq[(String, Double)] =
-      if (threads > 1) {
-        val byMedianRep = concWalls(concWalls.length / 2)._2
-        names.map(n => n -> byMedianRep.getOrElse(n, -1.0))
-      } else {
-        val stageCounter = Harness.listen(spark)
-        stageCounter.quiesce()
-        names.map { n =>
-          val s0 = stageCounter.snapshot.stages
-          val repop = once(n) // re-populate this name's cache entries after the clear
-          val (t, execs) =
-            if (prefix != "q" && repop > heavySingleRepSec) {
-              singleRep += n
-              (once(n), 2)
-            } else (median3(n), 4)
-          Harness.scrub(spark)
-          // stages are plan-determined (AQE off ⇒ static), so the count
-          // across the repop + timed reps must divide evenly; a
-          // remainder means some rep executed a different plan — flag
-          // it rather than averaging it away
-          val delta = stageCounter.quiesce().stages - s0
-          if (delta % execs != 0) {
-            System.err.println(
-              s"[bench] $n stage count not rep-stable: $delta/$execs")
-            stageUnstable += n
-          }
-          totalStages += delta / execs
-          // the interleaved pair, timed NOW — adjacent to the Spark
-          // reps it normalizes: the same query's oracle on the q-suite;
-          // the next control name in the rotation on the x-set
-          duckWorker.foreach { w =>
-            if (prefix == "q") sampleCtrl(w, n)
-            else {
-              sampleCtrl(w, ctrlNames(ctrlIdx % ctrlNames.length))
-              ctrlIdx += 1
-            }
-          }
-          n -> t
+    // Executed-stage accounting for the floor-adjusted gate (BASELINE.md
+    // "Gate" section; SCALE.md §37): the artifact carries every term of
+    // `suite ≤ 2 × (paired + total_stages × stage_ms)` co-measured in
+    // the same process — stage counts come from this listener around
+    // the timed reps, stage_ms from Harness.stageMs's 2-stage probe.
+    val stageCounter = Harness.listen(spark)
+    val timedStart = stageCounter.quiesce()
+    val medians: Seq[(String, Double)] = names.map { n =>
+      val s0 = stageCounter.snapshot.stages
+      val repop = once(n) // re-populate this name's cache entries after the clear
+      val (t, execs) =
+        if (prefix != "q" && repop > heavySingleRepSec) {
+          singleRep += n
+          (once(n), 2)
+        } else (median3(n), 4)
+      Harness.scrub(spark)
+      // stages are plan-determined (AQE off ⇒ static), so the count
+      // across the repop + timed reps must divide evenly; a remainder
+      // means some rep executed a different plan — flag it rather than
+      // averaging it away
+      val delta = stageCounter.quiesce().stages - s0
+      if (delta % execs != 0) {
+        System.err.println(
+          s"[bench] $n stage count not rep-stable: $delta/$execs")
+        stageUnstable += n
+      }
+      totalStages += delta / execs
+      // the interleaved pair, timed NOW — adjacent to the Spark reps it
+      // normalizes: the same query's oracle on the q-suite; the next
+      // control name in the rotation on any other set
+      duckWorker.foreach { w =>
+        if (prefix == "q") sampleCtrl(w, n)
+        else {
+          sampleCtrl(w, ctrlNames(ctrlIdx % ctrlNames.length))
+          ctrlIdx += 1
         }
       }
+      n -> t
+    }
+    // generated classes the JVM compiled over the timed window (every
+    // name's repopulate run and timed reps; SCALE.md §56)
+    val codegenCompiles = (stageCounter.quiesce() - timedStart).codegenCompiles
     duckWorker.foreach(_.close())
-    // paired DuckDB pass #2: immediately after — bracketing the Spark
-    // suite bounds any within-run floor drift
-    val duckPost = pairedPass()
     // failed names carry the -1 sentinel internally; they are reported
     // via "failed" ONLY — a -1 inside "queries" would be ingested as a
     // timing by any consumer summing or plotting per-query values
@@ -329,67 +253,41 @@ object Bench {
     // gate total (which would understate suite_total, corrupt
     // paired_ratio, and still exit 0 past an automated regression gate):
     // exclude failures from the total, name them in the artifact, and
-    // exit nonzero after printing. Concurrent mode's total is the
-    // median suite WALL (the throughput number the mode exists for),
-    // not the sum of contended per-query latencies.
-    val total =
-      if (threads > 1) concWalls(concWalls.length / 2)._1
-      else medians.collect { case (_, v) if v >= 0 => v }.sum
-    // per-name control medians (q-suite: one sample per name; x-set:
-    // ~7 rotation samples per name; the median absorbs spikes)
+    // exit nonzero after printing.
+    val total = medians.collect { case (_, v) if v >= 0 => v }.sum
+    // per-name control medians (q-suite: one sample per name; other
+    // sets: ~7 rotation samples per name; the median absorbs spikes)
     val duckQ: Map[String, Double] =
       duckSamples.map { case (k, b) => k -> medianOf(b.toSeq) }.toMap
-    // the gate's paired term, per mode: the interleaved per-query total
-    // when the worker covered every succeeded q query (sum of duck
-    // medians over the same names the Spark total sums); the per-name
-    // rotation-median sum for the x-set (full 46-name coverage
-    // required); the median full control pass for concurrent mode.
-    // Else the pre/post bracket mean.
-    val interleavedTotal: Option[Double] = duckWorker.flatMap { _ =>
-      if (threads > 1) {
-        val ps = concControls.toSeq.flatten
-        if (ps.nonEmpty) Some(medianOf(ps)) else None
-      } else if (prefix == "q") {
-        val okNames = medians.collect { case (k, v) if v >= 0 => k }
-        if (okNames.nonEmpty && okNames.forall(duckQ.contains))
-          Some(okNames.map(duckQ).sum)
-        else None
-      } else {
-        if (ctrlNames.forall(duckQ.contains)) Some(ctrlNames.map(duckQ).sum)
-        else None
-      }
-    }
-    val bracket = (duckPre, duckPost) match {
-      case (Some(a), Some(b)) => Some((a + b) / 2)
-      case (a, b) => a.orElse(b)
-    }
-    val paired = interleavedTotal.orElse(bracket)
-    val pairedMode =
-      if (interleavedTotal.isDefined) "interleaved"
-      else if (bracket.isDefined) "bracket" else "none"
+    // the gate's paired term: on the q-suite the sum of duck medians
+    // over the same names the Spark total sums, on any other set the
+    // per-name rotation-median sum over all 46 control names — each
+    // only when the worker covered every one of them. A partial sum is
+    // not a control total: an incomplete control is null, and so is
+    // the gate.
+    val covered =
+      if (prefix == "q") medians.collect { case (k, v) if v >= 0 => k }
+      else ctrlNames
+    val paired: Option[Double] =
+      if (covered.nonEmpty && covered.forall(duckQ.contains))
+        Some(covered.map(duckQ).sum)
+      else None
+    val pairedMode = if (paired.isDefined) "interleaved" else "none"
     def num(o: Option[Double]) = o.map("%.4f".format(_)).getOrElse("null")
     val pairedRatio = paired.map(total / _)
     val failedJs = failed.toSeq.sorted.map(n => s""""${esc(n)}"""")
       .mkString("[", ",", "]")
     val singleRepJs = singleRep.toSeq.sorted.map(n => s""""${esc(n)}"""")
       .mkString("[", ",", "]")
-    val concJs =
-      if (threads > 1)
-        s""","threads":$threads,"mode":"concurrent","walls":${concWalls
-          .map(w => "%.4f".format(w._1)).mkString("[", ",", "]")},"control_walls":${
-          concControls.map(c => num(c)).mkString("[", ",", "]")}"""
-      else ""
     // Floor-adjusted gate (BASELINE.md "Gate"): suite ≤ 2 × (paired
     // DuckDB + PROTOCOL stages × stage_ms). The stage count in the
     // bound is the FROZEN protocol constant, not the run's own measured
     // count (ADVICE r14 #1 — see ProtocolStages). Emitted only where it
-    // is defined: the sequential q-suite with a live paired control,
-    // under the static protocol — AQE runs are non-gating companions
-    // (their stage counts are runtime-adaptive, not the contract's).
+    // is defined: the q-suite with a live paired control.
     val stableJs =
       s""","stage_count_stable":${stageUnstable.isEmpty},"stage_unstable":${
         stageUnstable.toSeq.sorted.map(n => s""""${esc(n)}"""").mkString("[", ",", "]")}"""
-    val gating = countStages && prefix == "q" && adaptive == "false"
+    val gating = prefix == "q"
     val driftOpt: Option[Boolean] =
       if (gating) Some(totalStages != ProtocolStages) else None
     val boundOpt: Option[Double] =
@@ -410,24 +308,23 @@ object Bench {
     val gateJs =
       if (gating)
         s""","total_stages":$totalStages,"protocol_stages":$ProtocolStages,"stage_drift":${bool(driftOpt)}$stableJs,"stage_ms":${"%.1f".format(stageMs)},"gate_bound":${num(boundOpt)},"gate_green":${bool(greenOpt)}"""
-      else if (countStages)
+      else
         s""","total_stages":$totalStages$stableJs,"stage_ms":${"%.1f".format(stageMs)}"""
-      else ""
     val duckQJs =
       if (duckQ.isEmpty) ""
       else s""","duckdb_queries":${duckQ.toSeq.sortBy(_._1).map { case (k, v) =>
-        s""""${esc(k)}":${"%.5f".format(v)}""" }.mkString("{", ",", "}")},"duckdb_interleaved_total":${num(interleavedTotal)}"""
+        s""""${esc(k)}":${"%.5f".format(v)}""" }.mkString("{", ",", "}")},"duckdb_interleaved_total":${num(paired)}"""
     // "cpus" in BOTH output lines (r18, VERDICT r17 #2): the bench runs
     // on local[Harness.cpus], and the artifact SAYS so itself, so a
     // scaling consumer reading only the JSON can pair low/high-core runs
     // without trusting its own env bookkeeping.
-    println(s"""{"metric":"suite_total","value":${"%.4f".format(total)},"unit":"sec","cpus":$cpus,"queries":$qs,"sf":"${esc(sfDir)}","floor_ms":${"%.1f".format(floorMs)},"paired_control":"${PairedControl.ControlName}","paired_mode":"$pairedMode","duckdb_pre_total":${num(duckPre)},"duckdb_post_total":${num(duckPost)},"duckdb_paired_total":${num(paired)},"paired_total":${num(paired)},"paired_ratio":${num(pairedRatio)}$duckQJs,"failed":$failedJs,"single_rep":$singleRepJs$concJs$gateJs}""")
+    println(s"""{"metric":"suite_total","value":${"%.4f".format(total)},"unit":"sec","cpus":$cpus,"queries":$qs,"sf":"${esc(sfDir)}","floor_ms":${"%.1f".format(floorMs)},"paired_control":"${PairedControl.ControlName}","paired_mode":"$pairedMode","duckdb_paired_total":${num(paired)},"paired_total":${num(paired)},"paired_ratio":${num(pairedRatio)}$duckQJs,"failed":$failedJs,"single_rep":$singleRepJs$gateJs}""")
     // Tail-proof headline (VERDICT r16 #2): the full line above can
     // outgrow a consumer's tail capture (the interleaved per-query map
-    // pushed BENCH_r16.json's suite wall out of its own 2000-char
-    // tail), so every term of the gate verdict is REPEATED last, in a
-    // compact second line that always fits.
-    println(s"""{"metric":"headline","value":${"%.4f".format(total)},"unit":"sec","set":"$prefix","cpus":$cpus,"threads":$threads,"paired_mode":"$pairedMode","paired_total":${num(paired)},"paired_ratio":${num(pairedRatio)},"stages":${if (countStages) totalStages.toString else "null"},"stage_drift":${bool(driftOpt)},"gate_bound":${num(boundOpt)},"gate_green":${bool(greenOpt)},"failed":${failed.size}}""")
+    // pushed history/BENCH_r16.json's suite wall out of its own
+    // 2000-char tail), so every term of the gate verdict is REPEATED
+    // last, in a compact second line that always fits.
+    println(s"""{"metric":"headline","value":${"%.4f".format(total)},"unit":"sec","set":"$prefix","cpus":$cpus,"paired_mode":"$pairedMode","paired_total":${num(paired)},"paired_ratio":${num(pairedRatio)},"stages":$totalStages,"codegen_compiles":$codegenCompiles,"stage_drift":${bool(driftOpt)},"gate_bound":${num(boundOpt)},"gate_green":${bool(greenOpt)},"failed":${failed.size}}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

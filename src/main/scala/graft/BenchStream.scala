@@ -242,24 +242,17 @@ object BenchStream {
         s"${known.toSeq.sorted.mkString(",")})")
     }
     val subset = wanted.isDefined
-    // paired DuckDB control pass #1 (VERDICT r12 #1): the q-suite
-    // oracles timed in THIS process immediately before the timed
-    // drains — a drift control, not an engine comparison (DuckDB has
-    // no streaming; see PairedControl's scaladoc). Bracketing bounds
-    // within-run floor movement exactly as the main suite's pair does.
-    val duckPre = PairedControl.qControl(sfDir)
-    // per-op adjacency (VERDICT r16 #1): a long-lived warm DuckDB
-    // worker runs one FULL control pass immediately after each op's
-    // timed drains, so every op's number has a control sampled in the
-    // same weather — the r16 stream suite's +33% per-op delta sat on
-    // bracket evidence alone, exactly the spike-under-sampling §46
-    // killed for the gate. The paired term is the median pass.
+    // The paired control (VERDICT r12 #1, r16 #1): the q-suite oracles
+    // timed in THIS process — a drift control, not an engine comparison
+    // (DuckDB has no streaming; see PairedControl's scaladoc). A
+    // long-lived warm DuckDB worker runs one FULL control pass
+    // immediately after each op's timed drains, so every op's number
+    // has a control sampled in the same weather (§46: a pre/post
+    // bracket under-samples spikes inside the window). The paired term
+    // is the median pass.
     val ctrlNames =
       SparkEntry.queries.keys.toSeq.filter(_.startsWith("q")).sorted
-    val duckWorker =
-      if (!sys.env.get("SPARK_GRAFT_PAIRED").contains("off"))
-        PairedControl.interleaved(sfDir, ctrlNames)
-      else None
+    val duckWorker = PairedControl.interleaved(sfDir, ctrlNames)
     def ctrlPass(): Option[Double] = duckWorker.flatMap { w =>
       val ts = ctrlNames.map(w.time)
       if (ts.forall(_.isDefined)) Some(ts.flatten.sum) else None
@@ -282,7 +275,6 @@ object BenchStream {
       name -> t.median
     }
     duckWorker.foreach(_.close())
-    val duckPost = PairedControl.qControl(sfDir)
     val js = medians.map { case (k, v) => s""""$k":${"%.4f".format(v)}""" }
       .mkString("{", ",", "}")
     val wallsJs = rawWalls.map { case (k, ws) =>
@@ -292,24 +284,20 @@ object BenchStream {
     val ctrlJs = opControls.map { case (k, c) => s""""$k":${num(c)}""" }
       .mkString("{", ",", "}")
     val total = medians.map(_._2).sum
-    val bracket = (duckPre, duckPost) match {
-      case (Some(a), Some(b)) => Some((a + b) / 2)
-      case (a, b) => a.orElse(b)
-    }
-    val interleaved: Option[Double] = {
+    // an op without a full control pass (the worker missing or dead)
+    // leaves the pair null, with `paired_mode` "none": a median over
+    // some ops' controls is not the suite's control
+    val paired: Option[Double] = {
       val ps = opControls.values.flatten.toSeq
       if (opControls.nonEmpty && opControls.values.forall(_.isDefined))
         Some(ps.sorted.apply(ps.length / 2))
       else None
     }
-    val paired = interleaved.orElse(bracket)
-    val pairedMode =
-      if (interleaved.isDefined) "interleaved"
-      else if (bracket.isDefined) "bracket" else "none"
+    val pairedMode = if (paired.isDefined) "interleaved" else "none"
     val pairedRatio = paired.map(total / _)
     // subset runs get their own metric name for the same reason
     val metric = if (subset) "stream_subset_total" else "stream_suite_total"
-    println(s"""{"metric":"$metric","value":${"%.4f".format(total)},"unit":"sec","ops":$js,"walls":$wallsJs,"op_controls":$ctrlJs,"sf":"$sfDir","paired_control":"${PairedControl.ControlName}","paired_mode":"$pairedMode","duckdb_pre_total":${num(duckPre)},"duckdb_post_total":${num(duckPost)},"paired_total":${num(paired)},"paired_ratio":${num(pairedRatio)}}""")
+    println(s"""{"metric":"$metric","value":${"%.4f".format(total)},"unit":"sec","ops":$js,"walls":$wallsJs,"op_controls":$ctrlJs,"sf":"$sfDir","paired_control":"${PairedControl.ControlName}","paired_mode":"$pairedMode","paired_total":${num(paired)},"paired_ratio":${num(pairedRatio)}}""")
     // tail-proof headline (VERDICT r16 #2), same contract as Bench's
     println(s"""{"metric":"headline","value":${"%.4f".format(total)},"unit":"sec","set":"stream","ops_n":${medians.size},"paired_mode":"$pairedMode","paired_total":${num(paired)},"paired_ratio":${num(pairedRatio)}}""")
     spark.stop()

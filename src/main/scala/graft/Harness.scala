@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -30,19 +31,23 @@ object Harness {
     * [[Queries]] REPARTITION hint width. The only read of the variable. */
   lazy val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
 
+  /** The settings every session shares: UTC session time zone, no UI,
+    * ERROR logging. */
+  val BaseConf: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    "spark.log.level" -> "ERROR")
+
   /** The one session factory. Base conf: `local[cpus]` (or
     * `SPARK_GRAFT_MASTER`, the multi-JVM validation knob —
-    * `local-cluster[2,16,4096]` under spark-submit, SCALE.md §41/§42),
-    * UTC session time zone, no UI, ERROR logging. `conf` entries are
-    * applied after the base, so a caller may override any of them
-    * (Verify and Explain keep WARN logging). */
+    * `local-cluster[2,16,4096]` under spark-submit, SCALE.md §41/§42)
+    * and [[BaseConf]]. `conf` entries are applied after the base, so a
+    * caller may override any of them (Verify and Explain keep WARN
+    * logging). */
   def session(app: String, conf: (String, String)*): SparkSession = {
     val base = Seq(
       "spark.master" -> sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
-      "spark.app.name" -> app,
-      "spark.sql.session.timeZone" -> "UTC",
-      "spark.ui.enabled" -> "false",
-      "spark.log.level" -> "ERROR")
+      "spark.app.name" -> app) ++ BaseConf
     (base ++ conf).foldLeft(SparkSession.builder()) { case (b, (k, v)) =>
       b.config(k, v)
     }.getOrCreate()
@@ -70,7 +75,7 @@ object Harness {
     Timing(runs.map(_._1), runs.head._2)
   }
 
-  /** Between-names hygiene, in the UNTIMED gap (OPTIMIZATION_r18.md §8b):
+  /** Between-names hygiene, in the UNTIMED gap (history/OPTIMIZATION_r18.md §8b):
     * clearCache() alone was not enough. Dead broadcast/shuffle state from
     * prior ops is freed only when a GC collects the ContextCleaner's weak
     * refs, and a mostly-idle 8 g heap GCs so rarely that 30+ ops of debris
@@ -93,19 +98,23 @@ object Harness {
   /** Cumulative engine counters; `-` gives the delta over a window.
     * `maxTaskMs` is a running maximum, not a sum: a delta keeps the later
     * snapshot's, so it is the window's own only on a listener registered
-    * for that window. */
+    * for that window. `codegenCompiles` counts generated classes compiled
+    * (a codegen cache miss each) across the whole JVM, so a window's
+    * delta includes any other session's compiles in it. */
   final case class Counts(stages: Int, tasks: Long, jobs: Int,
                           executorRunMs: Long, shuffleWriteBytes: Long,
-                          spillBytes: Long, maxTaskMs: Long) {
+                          spillBytes: Long, maxTaskMs: Long,
+                          codegenCompiles: Long) {
     def -(o: Counts): Counts = Counts(stages - o.stages, tasks - o.tasks,
       jobs - o.jobs, executorRunMs - o.executorRunMs,
       shuffleWriteBytes - o.shuffleWriteBytes, spillBytes - o.spillBytes,
-      maxTaskMs)
+      maxTaskMs, codegenCompiles - o.codegenCompiles)
   }
 
   /** The one listener: executed stages, their tasks, finished jobs, the
     * stages' summed executor run time, shuffle write and disk spill
-    * bytes, and the longest task's executor run time. Skipped stages
+    * bytes, and the longest task's executor run time; a snapshot also
+    * reads the JVM's codegen compile count. Skipped stages
     * never complete, so a memoized plan shows up as a LOWER stage count
     * (SCALE.md §36). */
   final class Listener extends SparkListener {
@@ -131,7 +140,8 @@ object Harness {
         maxTask.accumulateAndGet(e.taskMetrics.executorRunTime, math.max(_, _))
     override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.incrementAndGet()
     def snapshot: Counts = Counts(stages.get, tasks.get, jobs.get,
-      runMs.get, shuffleBytes.get, spill.get, maxTask.get)
+      runMs.get, shuffleBytes.get, spill.get, maxTask.get,
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
     /** Listener bus is async: wait until the counters are unchanged for
       * `stableMs` (cap 5 s) before trusting a read — a fixed sleep would
       * be a race, not a protocol. */
@@ -170,7 +180,7 @@ object Harness {
     * container at THIS hour (it drifts ±30% between rounds, like the
     * paired DuckDB control it complements).
     *
-    * Probe-shape calibration against STAGE_AUDIT_r14.json's measured
+    * Probe-shape calibration against history/STAGE_AUDIT_r14.json's measured
     * effective overhead ((wall − exec)/stages, median 33 ms, bench
     * protocol ~24 ms): a bare-RDD 32-task shuffle no-op measured 43 ms
     * warm (over — fan-out the suite doesn't have), a bare-RDD 8-task one

@@ -1,11 +1,11 @@
 package graft
 
-/** Same-container DuckDB control passes for every bench artifact
-  * (VERDICT r7 #1, extended to the stream/xops artifacts per VERDICT
-  * r12 #1): the container floor drifts between rounds (measured ±30%),
-  * so every timed suite brackets itself with a co-measured DuckDB pass
-  * — drift moves numerator and denominator together and the paired
-  * ratio stays attributable at a glance.
+/** The same-container DuckDB control for every bench artifact (VERDICT
+  * r7 #1, extended to the stream/xops artifacts per VERDICT r12 #1): the
+  * container floor drifts between rounds (measured ±30%), so every timed
+  * suite is paired with a co-measured DuckDB control, interleaved with
+  * its own timings — drift moves numerator and denominator together and
+  * the paired ratio stays attributable at a glance.
   *
   * The control is ALWAYS the BASELINE.md q-suite oracles, for every
   * suite:
@@ -25,45 +25,14 @@ object PairedControl {
 
   val ControlName = "duckdb-q-suite"
 
-  /** One DuckDB pass over `names`' oracle SQL via tools/rebaseline.py
-    * (in-memory DB, warm-up pass, median-of-3 per query — the
-    * BASELINE.md protocol). None when the tool/interpreter is missing
-    * or fails — benching proceeds, the artifact records null. */
-  def duckdbSuite(sfDir: String, names: Seq[String]): Option[Double] =
-    try {
-      val sqls = names.flatMap(n => SparkEntry.oracleSql.get(n).map(n -> _))
-      val script = Seq("tools/rebaseline.py", "/root/repo/tools/rebaseline.py")
-        .map(new java.io.File(_)).find(_.isFile)
-      if (sqls.isEmpty || script.isEmpty) return None
-      val tmp = java.io.File.createTempFile("graft-rebaseline", ".json")
-      tmp.deleteOnExit()
-      val w = new java.io.PrintWriter(tmp, "UTF-8")
-      try w.write(sqls.map { case (n, q) =>
-        s""""${JsonOut.esc(n)}":"${JsonOut.esc(q)}"""" }
-        .mkString("{", ",", "}"))
-      finally w.close()
-      import scala.sys.process._
-      val out = new StringBuilder
-      val cmd = Seq("python3", script.get.getPath, sfDir, tmp.getPath)
-      val rc = cmd ! ProcessLogger(l => out.append(l), System.err.println)
-      if (rc != 0) return None
-      """"duckdb_total"\s*:\s*([0-9.]+)""".r
-        .findFirstMatchIn(out.toString).map(_.group(1).toDouble)
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** The q-suite control pass (the one every artifact pairs with). */
-  def qControl(sfDir: String): Option[Double] =
-    duckdbSuite(sfDir,
-      SparkEntry.queries.keys.toSeq.filter(_.startsWith("q")).sorted)
-
   /** A long-lived DuckDB worker for per-query interleaved pairing
     * (VERDICT r15 #2): one warm in-memory DB serves median-of-3
-    * timings on demand, so Bench can time each query's oracle
-    * IMMEDIATELY after the same query's Spark reps — drift moves both
-    * engines together at per-query granularity, where the old
-    * pre/post bracket under-sampled spikes inside the ~30 s Spark
-    * window. Any protocol hiccup marks the worker dead; callers fall
-    * back to the bracket passes (never a crashed bench). */
+    * timings on demand (the BASELINE.md protocol), so Bench can time
+    * each query's oracle IMMEDIATELY after the same query's Spark reps
+    * — drift moves both engines together at per-query granularity,
+    * where the old pre/post bracket under-sampled spikes inside the
+    * ~30 s Spark window. Any protocol hiccup marks the worker dead; a
+    * caller then reports a null pair (never a crashed bench). */
   final class InterleavedDuck private[PairedControl] (proc: Process) {
     private val in = new java.io.BufferedReader(
       new java.io.InputStreamReader(proc.getInputStream, "UTF-8"))
@@ -97,7 +66,7 @@ object PairedControl {
 
   /** Start the interleaved worker over `names`' oracles (blocks through
     * its warm pass). None when python/duckdb/the tool is unavailable —
-    * callers keep the bracket-only protocol. */
+    * the run then reports `paired_mode: "none"`. */
   def interleaved(sfDir: String, names: Seq[String]): Option[InterleavedDuck] =
     try {
       val sqls = names.flatMap(n => SparkEntry.oracleSql.get(n).map(n -> _))

@@ -38,11 +38,11 @@ object Pipeline {
     * per-stage scheduling floor that dominates small-query latency
     * amortizes across in-flight queries (measured: the 46-query suite
     * wall 6.2 s sequential → 3.1 s at 4 threads at sf0.1 —
-    * BENCH_r14_conc4.json; plateaus ~8 threads on the single
+    * history/BENCH_r14_conc4.json; plateaus ~8 threads on the single
     * DAGScheduler event loop).
     *
     * Scheduling: build the shared session with
-    * `spark.scheduler.mode=FAIR` (as Bench does for threads > 1) —
+    * `spark.scheduler.mode=FAIR` (as perfbench's concurrent phase does) —
     * FIFO lets one query's stages starve the rest and inflates tail
     * latency for no throughput gain. Each worker thread claims its own
     * FAIR pool (pools are created on demand; within a pool one query

@@ -52,7 +52,7 @@ object Queries {
     * partitioning — the bench protocol's volume-sized static shuffle AND
     * AQE's coalescing alike — sees single-digit-MB inputs and folds such a
     * plan into ONE task, serializing tens of millions of produced rows
-    * (guide §3.3, the exploding-join blind spot; OPTIMIZATION_r18.md §6).
+    * (the exploding-join blind spot; history/OPTIMIZATION_r18.md §6).
     * Parameterized off the run's core count ([[Harness.cpus]]: a
     * malformed `SPARK_GRAFT_CPUS` fails the run), NOT a hard-coded local
     * constant: the 8-core companion run gets width 8, a cluster session
@@ -376,7 +376,7 @@ object Queries {
     // Near-dup candidate generation + scoring: word 3-gram shingles,
     // inverted index self-join, exact Jaccard, top-20 most similar pairs.
     // r18b: the same serialized-expansion fix as x80 (guide §3.3; see
-    // hintPar and OPTIMIZATION_r18.md §8) — the docs scan is one row
+    // hintPar and history/OPTIMIZATION_r18.md §8) — the docs scan is one row
     // group, so the shingle explode, the inverted-index self-join's
     // probe side AND the (a,b) pair count all ran in ONE task. One
     // hash-repartition hint on documents parallelizes all three
@@ -764,7 +764,7 @@ object Queries {
     // 40.9 s at sf0.1 under the protocol config. The per-position hash
     // is fused by FuseMd5Prefix32 (plans/Rules.scala); the DuckDB text
     // below keeps the window form verbatim. The remaining wall was the
-    // exact 94.9M-row pair expansion — see OPTIMIZATION_r18.md §6/§8.
+    // exact 94.9M-row pair expansion — see history/OPTIMIZATION_r18.md §6/§8.
     //
     // r18b (guide §2.1/§3.3 — the exploding-join blind spot): every
     // byte-sized partitioning signal (static volume-sized shuffle, AQE
@@ -2426,7 +2426,7 @@ object Queries {
     // keeps the frequent-edge set ~constant (2.4k/3.6k/3.9k pairs at
     // the three SFs — measured) while raw pairs grow 134×.
     // r18b: x80-class serialized-expansion fix (see hintPar /
-    // OPTIMIZATION_r18.md §8) — the protocol's 1-partition exchange
+    // history/OPTIMIZATION_r18.md §8) — the protocol's 1-partition exchange
     // under the DISTINCT serialized the basket self-join's probe and
     // the pair expansion; the hinted `li` subquery at each join side
     // repartitions on the join key so the expansion runs width-way
@@ -2454,7 +2454,7 @@ object Queries {
     // form; operators.Graph.triangles is the persist-once scale path
     // (x165, same oracle — the x136/x140 policy).
     // r18b: x80-class serialized-expansion fix (see hintPar /
-    // OPTIMIZATION_r18.md §8), x162's hinted `li` subquery; DuckDialect
+    // history/OPTIMIZATION_r18.md §8), x162's hinted `li` subquery; DuckDialect
     // drops the hint.
     q("x163_triangles",
       s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -4507,7 +4507,7 @@ object Queries {
     // edge-sized input. This graph is near-neutral (≈0) — the number,
     // not its size, is the verdict.
     // r18b: x80-class serialized-expansion fix (see hintPar /
-    // OPTIMIZATION_r18.md §8), x162's hinted `li` subquery; DuckDialect
+    // history/OPTIMIZATION_r18.md §8), x162's hinted `li` subquery; DuckDialect
     // drops the hint.
     q("x269_assortativity",
       s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -4568,7 +4568,7 @@ object Queries {
     // out. Jaccard in integer bp; Adamic-Adar sums ≤ cn small ln terms,
     // rounded 4dp.
     // r18b: x80-class serialized-expansion fix (see hintPar /
-    // OPTIMIZATION_r18.md §8) — x162's hinted `li` subquery
+    // history/OPTIMIZATION_r18.md §8) — x162's hinted `li` subquery
     // parallelizes the basket pair build; the wedge self-join's probe
     // side repartitions on its join key (x.b = y.a) so the Σdeg² wedge
     // expansion and the (u,v) candidate count run width-way parallel
@@ -4914,7 +4914,7 @@ object Queries {
     // hash-rank would band candidates per user first (same trick as
     // the ANN bucket path).
     // r18b: x80-class serialized-expansion fix (see hintPar /
-    // OPTIMIZATION_r18.md §8) — the CROSS JOIN broadcasts the ~|cust|/100
+    // history/OPTIMIZATION_r18.md §8) — the CROSS JOIN broadcasts the ~|cust|/100
     // sampled users and STREAMS part, whose one-row-group scan is a
     // single task: the whole |users|×|parts| hash+rank fan-out ran
     // serial. Repartitioning the streamed side runs it width-way
@@ -5154,7 +5154,7 @@ object Queries {
     // exact integer basis points. Support pruning keeps the edge list
     // dimension-sized; the triangle join is the x163/x165 shape.
     // r18b: x80-class serialized-expansion fix (see hintPar /
-    // OPTIMIZATION_r18.md §8), x162's hinted `li` subquery; DuckDialect
+    // history/OPTIMIZATION_r18.md §8), x162's hinted `li` subquery; DuckDialect
     // drops the hint.
     q("x293_local_clustering",
       s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -7066,7 +7066,7 @@ object Queries {
     // quadratic-by-design oracle shape (x48 class); at scale the
     // histogram comes from the banded candidates themselves.
     // r18b: x48-class serialized-expansion fix (see hintPar /
-    // OPTIMIZATION_r18.md §8); DuckDialect drops the hint.
+    // history/OPTIMIZATION_r18.md §8); DuckDialect drops the hint.
     q("x364_lsh_band_sensitivity",
       s"""WITH w AS (SELECT doc_id, split(text,' ') AS w FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
         |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
@@ -7108,7 +7108,7 @@ object Queries {
     // banded join (never all pairs); the exact verify join is per
     // candidate — the standard verify-stage cost.
     // r18b: x48-class serialized-expansion fix (see hintPar /
-    // OPTIMIZATION_r18.md §8); DuckDialect drops the hint.
+    // history/OPTIMIZATION_r18.md §8); DuckDialect drops the hint.
     q("x365_minhash_jaccard_err",
       s"""WITH w AS (SELECT doc_id, split(text,' ') AS w FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
         |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
@@ -7172,7 +7172,7 @@ object Queries {
     // middle doc — at scale edges are the BANDED candidates, so wedge
     // count is bounded by the verified pair set, never the corpus.
     // r18b: x48-class serialized-expansion fix (see hintPar /
-    // OPTIMIZATION_r18.md §8); DuckDialect drops the hint.
+    // history/OPTIMIZATION_r18.md §8); DuckDialect drops the hint.
     q("x367_neardup_transitivity",
       s"""WITH w AS (SELECT doc_id, split(text,' ') AS w FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
         |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
@@ -7537,7 +7537,7 @@ object Queries {
     // joins are per-candidate (verify-stage cost) — but the exact gram
     // sides are the audited truth, so contract-SF only by design.
     // r18b: x48-class serialized-expansion fix (see hintPar /
-    // OPTIMIZATION_r18.md §8); DuckDialect drops the hint.
+    // history/OPTIMIZATION_r18.md §8); DuckDialect drops the hint.
     q("x379_shingle_size_sensitivity",
       s"""WITH w AS (SELECT doc_id, split(text,' ') AS w FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
         |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh
@@ -7735,7 +7735,7 @@ object Queries {
     // the all-sharing-pairs gram join, the audited truth — contract-SF
     // only (exactBaselines, x365's rule).
     // r18b: x48-class serialized-expansion fix (see hintPar /
-    // OPTIMIZATION_r18.md §8); DuckDialect drops the hint.
+    // history/OPTIMIZATION_r18.md §8); DuckDialect drops the hint.
     q("x386_lsh_recall_audit",
       s"""WITH w AS (SELECT doc_id, split(text,' ') AS w FROM (SELECT /*+ REPARTITION($hintPar, doc_id) */ doc_id, text FROM documents)),
         |sh AS (SELECT doc_id, explode(array_distinct(transform(sequence(1, size(w)-2), i -> concat_ws(' ', slice(w, i, 3))))) AS sh

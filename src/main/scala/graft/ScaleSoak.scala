@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * 2 and 3, SCALE.md §36) and the cache cleared between reps, then
   * [[Harness.scrub]]s. A scale's record holds the rows, the three walls
   * and their median, rep 1's stages, tasks, shuffle-write and spill
-  * bytes, the longest task of the three reps, and the post-GC heap read
+  * bytes and generated classes compiled, the longest task of the three
+  * reps, and the post-GC heap read
   * after the scrub. That heap is the bounded-driver evidence: run under a
   * pinned heap (sbt's `-Xmx`, or spark-submit's `--driver-memory`), a
   * path that kept corpus-sized state on the driver fails or shows a heap
@@ -107,6 +108,7 @@ object ScaleSoak {
     s"""{"x":$x,"rows":$rows,"walls_ms":${t.walls.map(ms).mkString("[", ",", "]")},""" +
       s""""median_ms":${ms(t.median)},"stages":${c.stages},"tasks":${c.tasks},""" +
       s""""shuffle_write_bytes":${c.shuffleWriteBytes},"spill_bytes":${c.spillBytes},""" +
+      s""""codegen_compiles":${c.codegenCompiles},""" +
       s""""max_task_ms":$maxTaskMs,"heap_used_mb":$heapMb,""" +
       s""""heap_max_mb":${rt.maxMemory >> 20},"exact_zero":${exactZero.fold("null")(_.toString)}}"""
   }

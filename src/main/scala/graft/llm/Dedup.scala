@@ -29,7 +29,7 @@ object Dedup {
     * by CLUSTER parallelism, not numShufflePartitions: the latter is
     * tuned for shuffle volume (4 in the bench protocol) and starved the
     * CPU-bound signature kernels to 4 of 32 cores (same fix as
-    * Fingerprint; measured on x52/x53 in BENCH_r04_xops.json). */
+    * Fingerprint; measured on x52/x53 in history/BENCH_r04_xops.json). */
   private[llm] def spread(df: DataFrame): DataFrame =
     df.repartition(math.max(
       df.sparkSession.sessionState.conf.numShufflePartitions,

@@ -77,7 +77,7 @@ object Fingerprint {
     * intersection, so the shuffle carries only (fp → doc_id) and the
     * aggregation is a plain pair count.
     *
-    * Plan shape pinned by measurement (sf0.1, BENCH_r04_xops.json;
+    * Plan shape pinned by measurement (sf0.1, history/BENCH_r04_xops.json;
     * 16.2 s naive → 6.3 s):
     *  1. The rolling-hash extraction dominates, twice over: every plan
     *     branch referencing it re-ran it (3 branches ≈ 15 s), and it was

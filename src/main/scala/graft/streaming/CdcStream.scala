@@ -350,9 +350,12 @@ object CdcStream {
     // off the raw batch: the dedup below keeps one row per key, so its
     // key set is the batch's, and the window shuffle runs only once, in
     // the write — one pass over the deduped batch, nothing persisted.
-    val changed: Set[Int] = batch
-      .select(bucketOf(col(keyCol), nb).as("b")).distinct()
-      .collect().map(_.getInt(0)).toSet
+    // A table's first commit has no previous buckets to prune or carry,
+    // so it skips this job.
+    val changed: Set[Int] =
+      if (prev.isEmpty) Set.empty
+      else batch.select(bucketOf(col(keyCol), nb).as("b")).distinct()
+        .collect().map(_.getInt(0)).toSet
 
     // latest-wins within the batch, tie-broken deterministically:
     // equal seq resolves upsert-over-tombstone, then by payload hash

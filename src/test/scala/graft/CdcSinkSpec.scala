@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 import graft.streaming.CdcStream
 
 /** The CDC sink's single-pass commit: nothing cached per batch, a batch
-  * rewrites only its keys' buckets, and tables written before this
-  * commit path read and extend unchanged. */
+  * rewrites only its keys' buckets, a table's first commit runs only its
+  * write, and tables written before this commit path read and extend
+  * unchanged. */
 class CdcSinkSpec extends SparkSpec {
   import spark.implicits._
 
@@ -73,6 +74,31 @@ class CdcSinkSpec extends SparkSpec {
     assert(got.count() == 200L)
     assert(rows(got.where(col("k").isin(u1, d, ins))) ==
       Seq((u1, -1.0, "u", 1000L), (ins, -3.0, "i", 1003L)).sortBy(_._1))
+  }
+
+  test("a table's first commit starts one job; the second batch still prunes") {
+    val table = fresh("/tmp/graft-cdc-first")
+    // static plans, as the benchmarks run them: AQE would split the
+    // write's shuffle into a job of its own
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val l = Harness.listen(spark)
+    val first = try {
+      val c0 = l.quiesce()
+      CdcStream.applyBatch(spark, table,
+        df((0L until 50L).map(k => (k, k.toDouble, "a", k, false)): _*), "k")
+      l.quiesce() - c0
+    } finally {
+      spark.sparkContext.removeSparkListener(l)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
+    // the write; no bucket-pruning job, as nothing is there to prune
+    assert(first.jobs == 1, s"$first")
+    CdcStream.applyBatch(spark, table, df((7L, -7.0, "u", 100L, false)), "k")
+    val (m0, m1) = (CdcStream.bucketDirs(spark, table, 0), CdcStream.bucketDirs(spark, table, 1))
+    assert(m1.filter { case (b, dir) => !m0.get(b).contains(dir) }.keySet == Set(bucketOf(7L)))
+    assert(m1.keySet == m0.keySet)
+    assert(CdcStream.latest(spark, table).get.count() == 50L)
   }
 
   test("a table written by the previous commit path reads and extends unchanged") {

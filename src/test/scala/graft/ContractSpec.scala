@@ -57,6 +57,69 @@ class ContractSpec extends SparkSpec {
         "and amend BASELINE.md")
   }
 
+  private def readText(path: String): String = {
+    val f = new java.io.File(path)
+    assert(f.isFile, s"$path not found from ${new java.io.File(".").getAbsolutePath}")
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+  }
+
+  // Knob census: the environment variables the program reads. Two choose
+  // where it runs (cores, master), three what it runs (corpus, Bench's
+  // query set, BenchStream's op subset). A new variable, or a lookup by
+  // a computed name, fails here.
+  test("knob census: src/main reads exactly 5 environment variables") {
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .toArray.map(_.toString).filter(_.endsWith(".scala")).toSeq
+    assert(sources.size > 50, s"src/main not found: ${sources.size} sources")
+    val text = sources.map(readText).mkString("\n")
+    val lookups = """sys\.env|System\.getenv""".r.findAllIn(text).size
+    val named = """(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\(\s*"([A-Za-z0-9_]+)"""".r
+      .findAllMatchIn(text).map(_.group(1)).toSeq
+    assert(named.size == lookups,
+      s"$lookups environment lookups, only ${named.size} by a literal name")
+    assert(named.toSet == Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER",
+      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_SET", "SPARK_GRAFT_STREAM_OPS"),
+      named.distinct.sorted.mkString(", "))
+  }
+
+  // perfbench's session() copies Bench's protocol settings; until it reads
+  // them from the program, this guard catches the copy drifting. A key
+  // set on one side only must be listed here with its reason, and the
+  // list must name exactly those keys.
+  test("drift guard: perfbench's session settings match Bench's protocol") {
+    val oneSided = Map(
+      "spark.log.level" ->
+        "perfbench sets its logging through perfbench/log4j2.properties",
+      "spark.cleaner.periodicGC.interval" ->
+        ("Bench feeds the ContextCleaner during multi-second x-ops; " +
+          "perfbench's passes take seconds and it scrubs between them"),
+      "spark.scheduler.mode" ->
+        ("perfbench's concurrent phase submits through Pipeline.concurrent, " +
+          "whose per-thread pools need FAIR; Bench runs sequentially (FIFO)"),
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
+        "read only by AQE, which both sessions turn off",
+      "spark.local.dir" -> "perfbench keeps its spill inside its work directory",
+      "spark.sql.warehouse.dir" -> "perfbench keeps its warehouse inside its work directory")
+    val main = readText("perfbench/src/main/scala/perfbench/Main.scala")
+    val body = main.indexOf("private def session()") match {
+      case -1 => fail("perfbench Main has no session()")
+      case i => main.substring(i, main.indexOf(".getOrCreate()", i))
+    }
+    val perf = """\.config\("([^"]+)",\s*(?:"([^"]*)"\)|[^\n]*)""".r
+      .findAllMatchIn(body).map(m => m.group(1) -> Option(m.group(2))).toMap
+    assert(perf.size >= 6, s"parsed too few perfbench settings: $perf")
+    val bench = (Harness.BaseConf ++ Bench.ProtocolConf).toMap
+    val both = bench.keySet.intersect(perf.keySet)
+    both.foreach { k =>
+      assert(perf(k).contains(bench(k)), s"$k: Bench ${bench(k)}, perfbench ${perf(k)}")
+    }
+    assert(both.contains("spark.sql.shuffle.partitions") &&
+      both.contains("spark.sql.adaptive.enabled"), both)
+    val only = (bench.keySet ++ perf.keySet) -- both
+    assert(only == oneSided.keySet,
+      s"unlisted: ${only -- oneSided.keySet}; listed but not one-sided: ${oneSided.keySet -- only}")
+  }
+
   // Output-type discipline gate (VERDICT r8 #3): Spark types
   // `BIGINT * 1.0 / BIGINT` as DECIMAL(28,6) while DuckDB yields DOUBLE,
   // and the driver canonicalizes decimal columns differently from double

@@ -1,8 +1,9 @@
 package graft
 
 /** The measurement harness's own contracts: the core-count parser fails
-  * loudly, the timer reports what it ran, and the listener counts the
-  * stages the per-stage probe divides by. */
+  * loudly, the timer reports what it ran, the listener counts the
+  * stages the per-stage probe divides by, and its codegen count sees a
+  * cache miss but not a hit. */
 class HarnessSpec extends SparkSpec {
 
   test("SPARK_GRAFT_CPUS: a malformed value fails, naming the variable") {
@@ -38,5 +39,22 @@ class HarnessSpec extends SparkSpec {
       assert(d.spillBytes == 0L, s"$d")
     } finally spark.sparkContext.removeSparkListener(l)
     assert(Harness.stageMs(spark, reps = 3) > 0.0)
+  }
+
+  test("codegen compiles: a fresh expression compiles, an immediate rerun compiles nothing") {
+    // the salt is inlined into the generated code, so no earlier test
+    // can have compiled this class
+    val salt = System.nanoTime()
+    val sql = s"SELECT id * ${salt}L AS v FROM range(0, 64, 1, 2) WHERE id % 7 <> ${salt % 7}"
+    val l = Harness.listen(spark)
+    try {
+      val c0 = l.quiesce()
+      spark.sql(sql).collect()
+      val c1 = l.quiesce()
+      spark.sql(sql).collect()
+      val c2 = l.quiesce()
+      assert((c1 - c0).codegenCompiles >= 1, s"${c1 - c0}")
+      assert((c2 - c1).codegenCompiles == 0, s"${c2 - c1}")
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 }

@@ -1,19 +1,19 @@
 #!/usr/bin/env python3
 """Interleaved per-query DuckDB pairing for the bench gate (VERDICT r15 #2).
 
-rebaseline.py brackets the WHOLE Spark suite with two ~1 s DuckDB blocks
-around a ~30 s Spark window, so a container load spike inside the Spark
-window is under-sampled by the control — exactly the asymmetry SCALE.md
-§41.2's interleaved rep-for-rep protocol was built to kill (r15's one
-RED bracket row is the measured exposure). This worker keeps ONE warm
+A pre/post bracket of the WHOLE Spark suite (two ~1 s DuckDB blocks
+around a ~30 s Spark window) under-samples a container load spike inside
+the Spark window — exactly the asymmetry SCALE.md §41.2's interleaved
+rep-for-rep protocol was built to kill (r15's one RED bracket row is the
+measured exposure). This worker keeps ONE warm
 in-memory DuckDB open for the whole bench run; Bench asks it to time
 each query's median-of-3 IMMEDIATELY after timing the same query's
 Spark median-of-3, so drift moves both engines together at per-query
 granularity and the per-query ratio is attributable.
 
-Timing protocol per query matches rebaseline.py exactly: in-memory DB,
-views over the same parquet files, one full warm-up pass at startup,
-median of 3 consecutive execute+fetchall walls.
+Timing protocol per query (BASELINE.md): in-memory DB, views over the
+same parquet files, one full warm-up pass at startup, median of 3
+consecutive execute+fetchall walls.
 
 Wire protocol (line-oriented stdin/stdout):
   startup -> {"ready": N}         after the warm pass

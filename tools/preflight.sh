@@ -48,6 +48,10 @@ oracle_sql_sha256=$(sha256sum /tmp/preflight_verify/oracle_sql.json 2>/dev/null 
 two_text_entries=$(grep -oE "^\[verify\] oracle texts: [0-9]+, hand-written: [0-9]+" \
   /tmp/preflight_verify.log | grep -oE "[0-9]+$" | tail -1)
 
+# The program's size in Scala lines (recorded only; no gate reads it),
+# so every recorded HEAD carries the net src/main LOC.
+src_main_lines=$(find src/main -name '*.scala' -exec cat {} + | wc -l)
+
 echo "[preflight] DuckDB oracle compare ..."
 python3 tools/oracle_check.py /root/testdata/sf0.01 /tmp/preflight_verify \
   >/tmp/preflight_oracle.log 2>&1
@@ -79,6 +83,7 @@ cat > PREFLIGHT.json <<EOF
   "verify_sf001": {"rc": $verify_rc, "query_errors": $verify_errs},
   "oracle_sql_sha256": "$oracle_sql_sha256",
   "two_text_entries": ${two_text_entries:-null},
+  "src_main_lines": $src_main_lines,
   "oracle": {"rc": $oracle_rc, "summary": "$oracle_line"},
   "leak_hits": $leak_hits,
   "green": $green
