@@ -108,23 +108,11 @@ object Catalog {
     }
   }
 
-  /** Idempotently register all tables from `dir` as temp views. */
+  /** Idempotently install graft's Catalyst surface on the session
+    * ([[GraftExtensions.install]]) and register all tables from `dir` as
+    * temp views. */
   def ensure(spark: SparkSession, dir: String): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(plans.DeferProjectionPastTopK))
-      spark.experimental.extraOptimizations ++= Seq(plans.DeferProjectionPastTopK)
-    if (!spark.experimental.extraOptimizations.contains(plans.FuseMd5Prefix32))
-      spark.experimental.extraOptimizations ++= Seq(plans.FuseMd5Prefix32)
-    functions.CosineSim.register(spark)
-    functions.PqLutScore.register(spark)
-    functions.SimHash64.register(spark)
-    functions.WinnowFps.register(spark)
-    functions.WinnowFpsMd5.register(spark)
-    functions.Md5Prefix32Expr.register(spark)
-    functions.AffineMinSig.register(spark)
-    functions.FoldAccents.register(spark)
-    functions.DamerauLevenshtein.register(spark)
-    functions.JaroWinkler.register(spark)
-    functions.PerceptualHash32.register(spark)
+    GraftExtensions.install(spark)
     if (registeredDir.get(spark) != dir) {
       // Required to read the ns-precision events.ts column; the other
       // tables use ms timestamps and are unaffected by this flag.

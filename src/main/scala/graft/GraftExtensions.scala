@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** The library's `spark.sql.extensions` entry point — the deployment
   * path for a cluster that wants graft's Catalyst surface WITHOUT
@@ -12,114 +14,105 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * Injects, at session build time (no per-session mutation races, no
-  * dependence on `spark.experimental`):
-  *  - [[plans.DeferProjectionPastTopK]] — the optimizer rule keeping
-  *    expensive scalar projections above ORDER BY+LIMIT so they run on
-  *    k rows, not N;
-  *  - [[plans.AsOfStrategy]] — the planner strategy compiling the
-  *    native as-of join logical node to its co-partitioned streaming
-  *    merge SparkPlan;
-  *  - the codegen'd expression functions (`cosine_sim`, `simhash64`,
-  *    `winnow_fps`, `fold_accents`) as persistent-registry builtins.
-  *
-  * [[Catalog.ensure]] keeps its `spark.experimental` + temp-function
-  * registration path so the test/driver surface works on a plain
-  * session; both paths install the same objects, so running under both
-  * is idempotent in effect (the registry entries are replaced, the
-  * experimental lists deduplicate).
+  * Injects, at session build time, every row of the companion's table:
+  * the optimizer rules, the planner strategy and the SQL functions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftExtensions.Rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    ext.injectPlannerStrategy(_ => GraftExtensions.Strategy)
+    GraftExtensions.Functions.foreach(f => ext.injectFunction((f.id, f.info, f.builder)))
+  }
+}
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "scala_udf")
+/** graft's whole Catalyst surface, written down once. Two ways in read
+  * it: the `spark.sql.extensions` class above (at session build) and
+  * [[install]] (on a live session, what [[Catalog.ensure]] and
+  * [[plans.AsOf.join]] call). The Column-DSL forms in `graft.functions`
+  * wrap their expressions directly and need neither. */
+object GraftExtensions {
 
-  /** Wrong arg counts must surface as an error naming the function and
-    * its expected arity — not an IndexOutOfBoundsException from
-    * exprs(i) deep in plan construction. */
-  private def arity(name: String, n: Int)(
-      build: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == n,
-        s"$name expects $n argument(s), got ${exprs.length}")
+  /** One SQL function: its name, DESCRIBE usage text, argument count
+    * and expression builder. */
+  final case class Fn(name: String, usage: String, arity: Int,
+                      build: Seq[Expression] => Expression) {
+    val id: FunctionIdentifier = FunctionIdentifier(name)
+    val info: ExpressionInfo =
+      new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "scala_udf")
+    /** Wrong arg counts surface as an error naming the function and its
+      * expected arity — not an IndexOutOfBoundsException from exprs(i)
+      * deep in plan construction. */
+    val builder: Seq[Expression] => Expression = exprs => {
+      require(exprs.length == arity,
+        s"$name expects $arity argument(s), got ${exprs.length}")
       build(exprs)
     }
+  }
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => plans.DeferProjectionPastTopK)
-    ext.injectOptimizerRule(_ => plans.FuseMd5Prefix32)
-    ext.injectPlannerStrategy(_ => plans.AsOfStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float arrays"),
-      arity("cosine_sim", 2)(exprs => functions.CosineSim(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("pq_lut_score"),
-      info("pq_lut_score",
-        "pq_lut_score(codes, lut) - asymmetric-distance LUT sum over PQ codes (lut flattened m x ksub)"),
-      arity("pq_lut_score", 2)(exprs => functions.PqLutScore(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(tokens) - 64-bit SimHash of a token array"),
-      arity("simhash64", 1)(exprs => functions.SimHash64(exprs.head))))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fps"),
-      info("winnow_fps",
-        "winnow_fps(text, k, w) - winnowing fingerprint set (k-gram window minima)"),
-      arity("winnow_fps", 3)(exprs => functions.WinnowFps.fromExprs(exprs))))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fps_md5"),
-      info("winnow_fps_md5",
-        "winnow_fps_md5(text, k, w) - portable-family winnowing fingerprints (md5-prefix k-gram hashes, full windows only)"),
-      arity("winnow_fps_md5", 3)(exprs => functions.WinnowFpsMd5.fromExprs(exprs))))
-    ext.injectFunction((
-      FunctionIdentifier("md5_prefix32"),
-      info("md5_prefix32",
-        "md5_prefix32(s) - first 8 hex chars of md5 as BIGINT (the portable-family content hash, fused)"),
-      arity("md5_prefix32", 1)(exprs => functions.Md5Prefix32Expr(exprs.head))))
-    ext.injectFunction((
-      FunctionIdentifier("affine_minsig"),
-      info("affine_minsig",
-        "affine_minsig(hvs, n) - n-element MinHash signature: min of (hv*a_i+b_i) mod 2^31-1 over the hash array, perms from the canonical table"),
-      arity("affine_minsig", 2)(exprs => functions.AffineMinSig.fromExprs(exprs))))
-    ext.injectFunction((
-      FunctionIdentifier("fold_accents"),
-      info("fold_accents", "fold_accents(s) - strip diacritics (NFD, combining marks removed)"),
-      arity("fold_accents", 1)(exprs => functions.FoldAccents(exprs.head))))
-    ext.injectFunction((
-      FunctionIdentifier("damerau_levenshtein"),
-      info("damerau_levenshtein",
-        "damerau_levenshtein(a, b) - unrestricted Damerau-Levenshtein edit distance"),
-      arity("damerau_levenshtein", 2)(exprs =>
-        functions.DamerauLevenshtein(exprs(0), exprs(1)))))
-    // jaro_winkler was MISSING here while Catalog.ensure registers it —
-    // an extensions-deployed cluster failed x241's analysis with
-    // UNRESOLVED_ROUTINE; RulesSpec now pins the parity for all six
-    ext.injectFunction((
-      FunctionIdentifier("ahash32"),
-      info("ahash32",
-        "ahash32(grid) - portable 32-bit average hash of a float luminance grid (bp-quantized integer mean test)"),
-      arity("ahash32", 1)(exprs => functions.AHash32(exprs.head))))
-    ext.injectFunction((
-      FunctionIdentifier("dhash32"),
-      info("dhash32",
-        "dhash32(grid) - portable 32-bit difference hash (disjoint adjacent-cell gradients, bp-quantized)"),
-      arity("dhash32", 1)(exprs => functions.DHash32(exprs.head))))
-    ext.injectFunction((
-      FunctionIdentifier("ahash64"),
-      info("ahash64",
-        "ahash64(grid) - production 64-bit average hash (all grid cells; low half == ahash32)"),
-      arity("ahash64", 1)(exprs => functions.AHash64(exprs.head))))
-    ext.injectFunction((
-      FunctionIdentifier("dhash64"),
-      info("dhash64",
-        "dhash64(grid) - production 64-bit difference hash (low half == dhash32)"),
-      arity("dhash64", 1)(exprs => functions.DHash64(exprs.head))))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      info("jaro_winkler",
-        "jaro_winkler(a, b) - Jaro-Winkler similarity (DuckDB-compatible variant)"),
-      arity("jaro_winkler", 2)(exprs =>
-        functions.JaroWinkler(exprs(0), exprs(1)))))
+  val Functions: Seq[Fn] = {
+    import functions._
+    Seq(
+      Fn("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float arrays",
+        2, e => CosineSim(e(0), e(1))),
+      Fn("pq_lut_score",
+        "pq_lut_score(codes, lut) - asymmetric-distance LUT sum over PQ codes (lut flattened m x ksub)",
+        2, e => PqLutScore(e(0), e(1))),
+      Fn("simhash64", "simhash64(tokens) - 64-bit SimHash of a token array",
+        1, e => SimHash64(e(0))),
+      Fn("winnow_fps",
+        "winnow_fps(text, k, w) - winnowing fingerprint set (k-gram window minima)",
+        3, WinnowFps.fromExprs),
+      Fn("winnow_fps_md5",
+        "winnow_fps_md5(text, k, w) - portable-family winnowing fingerprints (md5-prefix k-gram hashes, full windows only)",
+        3, WinnowFpsMd5.fromExprs),
+      Fn("md5_prefix32",
+        "md5_prefix32(s) - first 8 hex chars of md5 as BIGINT (the portable-family content hash, fused)",
+        1, e => Md5Prefix32Expr(e(0))),
+      Fn("affine_minsig",
+        "affine_minsig(hvs, n) - n-element MinHash signature: min of (hv*a_i+b_i) mod 2^31-1 over the hash array, perms from the canonical table",
+        2, AffineMinSig.fromExprs),
+      Fn("fold_accents", "fold_accents(s) - strip diacritics (NFD, combining marks removed)",
+        1, e => FoldAccents(e(0))),
+      Fn("damerau_levenshtein",
+        "damerau_levenshtein(a, b) - unrestricted Damerau-Levenshtein edit distance",
+        2, e => DamerauLevenshtein(e(0), e(1))),
+      Fn("jaro_winkler",
+        "jaro_winkler(a, b) - Jaro-Winkler similarity (DuckDB-compatible variant)",
+        2, e => JaroWinkler(e(0), e(1))),
+      Fn("ahash32",
+        "ahash32(grid) - portable 32-bit average hash of a float luminance grid (bp-quantized integer mean test)",
+        1, e => AHash32(e(0))),
+      Fn("dhash32",
+        "dhash32(grid) - portable 32-bit difference hash (disjoint adjacent-cell gradients, bp-quantized)",
+        1, e => DHash32(e(0))),
+      Fn("ahash64",
+        "ahash64(grid) - production 64-bit average hash (all grid cells; low half == ahash32)",
+        1, e => AHash64(e(0))),
+      Fn("dhash64",
+        "dhash64(grid) - production 64-bit difference hash (low half == dhash32)",
+        1, e => DHash64(e(0))))
+  }
+
+  /** The optimizer rules, in the order they run:
+    *  - [[plans.DeferProjectionPastTopK]] keeps expensive scalar
+    *    projections above ORDER BY+LIMIT so they run on k rows, not N;
+    *  - [[plans.FuseMd5Prefix32]] rewrites the SQL md5-prefix hash
+    *    composition to the fused `md5_prefix32` kernel. */
+  val Rules: Seq[Rule[LogicalPlan]] = Seq(plans.DeferProjectionPastTopK, plans.FuseMd5Prefix32)
+
+  /** The planner strategy compiling the native as-of join logical node
+    * to its co-partitioned streaming merge. */
+  val Strategy: plans.AsOfStrategy.type = plans.AsOfStrategy
+
+  /** Install the table on a live session (idempotent): functions into
+    * its registry (replacing same-named entries), rules and strategy
+    * into `spark.experimental` unless already there. */
+  def install(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    Functions.foreach(f => registry.registerFunction(f.id, f.info, f.builder))
+    val exp = spark.experimental
+    val missing = Rules.filterNot(exp.extraOptimizations.contains)
+    if (missing.nonEmpty) exp.extraOptimizations ++= missing
+    if (!exp.extraStrategies.contains(Strategy)) exp.extraStrategies ++= Seq(Strategy)
   }
 }

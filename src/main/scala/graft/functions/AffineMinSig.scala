@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -123,16 +123,14 @@ case class AffineMinSig(child: Expression, numHashes: Int)
 }
 
 object AffineMinSig {
-  /** Column-DSL form. Wraps the expression DIRECTLY — no registry
-    * lookup, so the Column analyzes on ANY session, prepped or not
-    * (ADVICE r12 #1; the SQL name stays registered for the SQL dialect). */
+  /** Column-DSL form: wraps the expression directly, so it analyzes on
+    * any session. */
   def apply(hvs: Column, numHashes: Int): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      AffineMinSig(org.apache.spark.sql.GraftBridge.expr(hvs), numHashes))
+    GraftBridge.column(AffineMinSig(GraftBridge.expr(hvs), numHashes))
 
-  /** Expression builder: numHashes must be an integer literal in
-    * 1..1024 (the perm table is generated, not listed — an absurd width
-    * is a caller bug, not a workload). */
+  /** The SQL builder ([[graft.GraftExtensions]]): numHashes must be an
+    * integer literal in 1..1024 (the perm table is generated, not
+    * listed — an absurd width is a caller bug, not a workload). */
   def fromExprs(exprs: Seq[Expression]): AffineMinSig = {
     val n = exprs(1) match {
       case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
@@ -143,13 +141,4 @@ object AffineMinSig {
       s"affine_minsig numHashes must be in 1..1024, got $n")
     AffineMinSig(exprs(0), n)
   }
-
-  /** Register as a SQL function on the session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "affine_minsig",
-      exprs => { require(exprs.length == 2,
-        s"affine_minsig expects 2 arguments, got ${exprs.length}")
-        fromExprs(exprs) },
-      "scala_udf")
 }

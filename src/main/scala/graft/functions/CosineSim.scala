@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -109,13 +109,8 @@ case class CosineSim(left: Expression, right: Expression)
 }
 
 object CosineSim {
-  /** Column-DSL form — resolves through the registry, so call
-    * [[register]] on the session first. */
+  /** Column-DSL form: wraps the expression directly, so it analyzes on
+    * any session. */
   def apply(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("cosine_sim", a, b)
-
-  /** Register as a SQL function on the session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
+    GraftBridge.column(CosineSim(GraftBridge.expr(a), GraftBridge.expr(b)))
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -73,13 +73,8 @@ object UnicodeFold {
 }
 
 object FoldAccents {
-  /** Column-DSL form — resolves through the registry, so call
-    * [[register]] on the session first (Catalog.ensure does). */
+  /** Column-DSL form: wraps the expression directly, so it analyzes on
+    * any session. */
   def apply(str: Column): Column =
-    org.apache.spark.sql.functions.call_function("fold_accents", str)
-
-  /** Register as a SQL function on the session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fold_accents", exprs => FoldAccents(exprs(0)), "scala_udf")
+    GraftBridge.column(FoldAccents(GraftBridge.expr(str)))
 }

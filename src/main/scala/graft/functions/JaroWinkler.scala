@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -105,14 +105,8 @@ object JaroWinkler {
     jaro + prefix * 0.1 * (1.0 - jaro)
   }
 
-  /** Column-DSL form — resolves through the registry, so call
-    * [[register]] on the session first (Catalog.ensure does). */
+  /** Column-DSL form: wraps the expression directly, so it analyzes on
+    * any session. */
   def apply(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("jaro_winkler", a, b)
-
-  /** Register as a SQL function on the session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1)),
-      "scala_udf")
+    GraftBridge.column(JaroWinkler(GraftBridge.expr(a), GraftBridge.expr(b)))
 }

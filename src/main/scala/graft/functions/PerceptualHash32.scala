@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -87,23 +87,6 @@ object PerceptualHash32 {
 
   def aHash(arr: ArrayData): Long = aHashW(arr, 32)
   def dHash(arr: ArrayData): Long = dHashW(arr, 32)
-
-  /** Register the four SQL names on the session (idempotent) — the
-    * Column DSL wraps expressions directly and never needs this; the
-    * SQL dialect and cross-session expr() callers do. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    def reg(name: String, build: Expression => Expression): Unit =
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name,
-        exprs => { require(exprs.length == 1,
-          s"$name expects 1 argument, got ${exprs.length}")
-          build(exprs.head) },
-        "scala_udf")
-    reg("ahash32", AHash32(_))
-    reg("dhash32", DHash32(_))
-    reg("ahash64", AHash64(_))
-    reg("dhash64", DHash64(_))
-  }
 }
 
 abstract class PerceptualHash32Base extends UnaryExpression {
@@ -169,25 +152,21 @@ case class DHash64(child: Expression) extends PerceptualHash32Base {
 object AHash32 {
   /** Direct expression wrap — session-independent (ADVICE r12 #1). */
   def apply(c: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      AHash32(org.apache.spark.sql.GraftBridge.expr(c)))
+    GraftBridge.column(AHash32(GraftBridge.expr(c)))
 }
 
 object DHash32 {
   /** Direct expression wrap — session-independent (ADVICE r12 #1). */
   def apply(c: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      DHash32(org.apache.spark.sql.GraftBridge.expr(c)))
+    GraftBridge.column(DHash32(GraftBridge.expr(c)))
 }
 
 object AHash64 {
   def apply(c: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      AHash64(org.apache.spark.sql.GraftBridge.expr(c)))
+    GraftBridge.column(AHash64(GraftBridge.expr(c)))
 }
 
 object DHash64 {
   def apply(c: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      DHash64(org.apache.spark.sql.GraftBridge.expr(c)))
+    GraftBridge.column(DHash64(GraftBridge.expr(c)))
 }

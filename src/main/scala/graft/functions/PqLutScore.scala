@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -101,13 +101,8 @@ case class PqLutScore(left: Expression, right: Expression)
 }
 
 object PqLutScore {
-  /** Column-DSL form — resolves through the registry, so call
-    * [[register]] on the session first. */
+  /** Column-DSL form: wraps the expression directly, so it analyzes on
+    * any session. */
   def apply(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("pq_lut_score", a, b)
-
-  /** Register as a SQL function on the session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_lut_score", exprs => PqLutScore(exprs(0), exprs(1)), "scala_udf")
+    GraftBridge.column(PqLutScore(GraftBridge.expr(a), GraftBridge.expr(b)))
 }

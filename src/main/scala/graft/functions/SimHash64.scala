@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -93,13 +93,8 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 }
 
 object SimHash64 {
-  /** Column-DSL form — resolves through the registry, so call
-    * [[register]] on the session first (Catalog.ensure does). */
+  /** Column-DSL form: wraps the expression directly, so it analyzes on
+    * any session. */
   def apply(words: Column): Column =
-    org.apache.spark.sql.functions.call_function("simhash64", words)
-
-  /** Register as a SQL function on the session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs(0)), "scala_udf")
+    GraftBridge.column(SimHash64(GraftBridge.expr(words)))
 }

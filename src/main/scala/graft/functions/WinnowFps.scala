@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -31,6 +31,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   */
 case class WinnowFps(child: Expression, k: Int, window: Int)
     extends UnaryExpression {
+  require(k >= 1 && window >= 1,
+    s"winnow_fps requires k >= 1 and window >= 1, got k=$k window=$window")
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -113,34 +115,19 @@ case class WinnowFps(child: Expression, k: Int, window: Int)
 }
 
 object WinnowFps {
-  /** Column-DSL form — resolves through the registry, so call
-    * [[register]] on the session first (Catalog.ensure does). */
+  /** Column-DSL form: wraps the expression directly, so it analyzes on
+    * any session. */
   def apply(text: Column, k: Int = 8, window: Int = 4): Column =
-    org.apache.spark.sql.functions.call_function(
-      "winnow_fps", text,
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(window))
+    GraftBridge.column(WinnowFps(GraftBridge.expr(text), k, window))
 
-  /** Expression builder shared by [[register]] and
-    * [[graft.GraftExtensions]]. k and window must be integer literals. */
+  /** The SQL builder ([[graft.GraftExtensions]]): k and window must be
+    * integer literals. */
   def fromExprs(exprs: Seq[Expression]): WinnowFps = {
     def intLit(e: Expression, what: String): Int = e match {
       case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
       case other => throw new IllegalArgumentException(
         s"winnow_fps $what must be an integer literal, got $other")
     }
-    val (k, w) = (intLit(exprs(1), "k"), intLit(exprs(2), "window"))
-    require(k >= 1 && w >= 1,
-      s"winnow_fps requires k >= 1 and window >= 1, got k=$k window=$w")
-    WinnowFps(exprs(0), k, w)
+    WinnowFps(exprs(0), intLit(exprs(1), "k"), intLit(exprs(2), "window"))
   }
-
-  /** Register as a SQL function on the session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fps",
-      exprs => { require(exprs.length == 3,
-        s"winnow_fps expects 3 arguments, got ${exprs.length}")
-        fromExprs(exprs) },
-      "scala_udf")
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -76,24 +76,10 @@ case class Md5Prefix32Expr(child: Expression) extends UnaryExpression {
 }
 
 object Md5Prefix32Expr {
-  /** Column-DSL form. Wraps the expression DIRECTLY (no registry lookup):
-    * call_function resolves by NAME at analysis time against the
-    * DataFrame's OWN session, so a Column built while a prepped session
-    * was active failed on a sibling that never ran Catalog.ensure /
-    * GraftExtensions (ADVICE r12 #1). Direct wrapping is session-
-    * independent — the SQL name stays registered for the SQL dialect. */
+  /** Column-DSL form: wraps the expression directly, so it analyzes on
+    * any session. */
   def apply(c: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      Md5Prefix32Expr(org.apache.spark.sql.GraftBridge.expr(c)))
-
-  /** Register as a SQL function on the session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_prefix32",
-      exprs => { require(exprs.length == 1,
-        s"md5_prefix32 expects 1 argument, got ${exprs.length}")
-        Md5Prefix32Expr(exprs.head) },
-      "scala_udf")
+    GraftBridge.column(Md5Prefix32Expr(GraftBridge.expr(c)))
 }
 
 /** Native winnowing fingerprint extraction under the PORTABLE hash family
@@ -123,6 +109,8 @@ object Md5Prefix32Expr {
   * allocation beyond the hash array itself). */
 case class WinnowFpsMd5(child: Expression, k: Int, window: Int)
     extends UnaryExpression {
+  require(k >= 1 && window >= 1,
+    s"winnow_fps_md5 requires k >= 1 and window >= 1, got k=$k window=$window")
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -241,34 +229,19 @@ case class WinnowFpsMd5(child: Expression, k: Int, window: Int)
 }
 
 object WinnowFpsMd5 {
-  /** Column-DSL form — resolves through the registry, so call
-    * [[register]] on the session first (Catalog.ensure does). */
+  /** Column-DSL form: wraps the expression directly, so it analyzes on
+    * any session. */
   def apply(text: Column, k: Int = 8, window: Int = 4): Column =
-    org.apache.spark.sql.functions.call_function(
-      "winnow_fps_md5", text,
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(window))
+    GraftBridge.column(WinnowFpsMd5(GraftBridge.expr(text), k, window))
 
-  /** Expression builder shared by [[register]] and
-    * [[graft.GraftExtensions]]. k and window must be integer literals. */
+  /** The SQL builder ([[graft.GraftExtensions]]): k and window must be
+    * integer literals. */
   def fromExprs(exprs: Seq[Expression]): WinnowFpsMd5 = {
     def intLit(e: Expression, what: String): Int = e match {
       case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
       case other => throw new IllegalArgumentException(
         s"winnow_fps_md5 $what must be an integer literal, got $other")
     }
-    val (k, w) = (intLit(exprs(1), "k"), intLit(exprs(2), "window"))
-    require(k >= 1 && w >= 1,
-      s"winnow_fps_md5 requires k >= 1 and window >= 1, got k=$k window=$w")
-    WinnowFpsMd5(exprs(0), k, w)
+    WinnowFpsMd5(exprs(0), intLit(exprs(1), "k"), intLit(exprs(2), "window"))
   }
-
-  /** Register as a SQL function on the session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fps_md5",
-      exprs => { require(exprs.length == 3,
-        s"winnow_fps_md5 expects 3 arguments, got ${exprs.length}")
-        fromExprs(exprs) },
-      "scala_udf")
 }

@@ -49,12 +49,8 @@ object Ann {
     * corpus-sized scoring: accepts float or double arrays per side,
     * arithmetic bit-identical to [[cosine]] over the widened doubles
     * (CosineSim's contract — the oracle hashes of every consumer pin
-    * it). Registers the function on the session (idempotent). */
-  def nativeCosine(spark: org.apache.spark.sql.SparkSession,
-                   a: Column, b: Column): Column = {
-    graft.functions.CosineSim.register(spark)
-    graft.functions.CosineSim(a, b)
-  }
+    * it). */
+  def nativeCosine(a: Column, b: Column): Column = graft.functions.CosineSim(a, b)
 
   /** Exact top-k by cosine vs a query vector: one narrow scan, the
     * native cosine kernel in whole-stage codegen, TakeOrdered. */
@@ -63,7 +59,7 @@ object Ann {
     embeddings
       .select(col("vec_id"), col("embedding"))
       .withColumn("sim",
-        nativeCosine(embeddings.sparkSession, col("embedding"), q))
+        nativeCosine(col("embedding"), q))
       .select(col("vec_id"), col("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
@@ -145,7 +141,7 @@ object Ann {
     val assigned = ivfAssign(base, cs)
     val q = lit(query.toArray)
     assigned.where(col("list").isin(probe: _*))
-      .withColumn("sim", nativeCosine(embeddings.sparkSession, col("e"), q))
+      .withColumn("sim", nativeCosine(col("e"), q))
       .select(col("vec_id"), col("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
@@ -335,7 +331,7 @@ object Ann {
     val q = lit(query.toArray)
     candidates.join(embeddings.select(col("vec_id"), col("embedding")), "vec_id")
       .withColumn("sim",
-        nativeCosine(embeddings.sparkSession, col("embedding"), q))
+        nativeCosine(col("embedding"), q))
       .select(col("vec_id"), col("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
@@ -362,7 +358,7 @@ object Ann {
       .dropDuplicates("a", "b")
     cands
       .withColumn("sim_bp",
-        floor(nativeCosine(embeddings.sparkSession, col("ea"), col("eb"))
+        floor(nativeCosine(col("ea"), col("eb"))
           * 10000.0).cast("long"))
       .where(col("sim_bp") >= minSimBp)
       .select(col("a"), col("b"), col("sim_bp"))
@@ -427,7 +423,7 @@ object Ann {
         col("x.vec_id") < col("y.vec_id"))
       .select(col("x.cluster_id").as("cluster_id"),
         col("x.vec_id").as("keep_id"), col("y.vec_id").as("drop_id"),
-        floor(nativeCosine(embeddings.sparkSession, col("x.e"), col("y.e"))
+        floor(nativeCosine(col("x.e"), col("y.e"))
           * 10000.0).cast("long").as("sim_bp"))
       .where(col("sim_bp") >= minSimBp)
       .orderBy(col("cluster_id"), col("keep_id"), col("drop_id"))
@@ -486,7 +482,7 @@ object Ann {
     val b = bucketed(embeddings, mat)
     val q = lit(query.toArray)
     b.where(col("bucket").isin(probeList: _*))
-      .withColumn("sim", nativeCosine(embeddings.sparkSession, col("e"), q))
+      .withColumn("sim", nativeCosine(col("e"), q))
       .select(col("vec_id"), col("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
@@ -508,7 +504,7 @@ object Ann {
     spark.read.parquet(path)
       .where(col("bucket").isin(probeList: _*))
       .select(col("vec_id"), col("embedding"))
-      .withColumn("sim", nativeCosine(spark, col("embedding"), q))
+      .withColumn("sim", nativeCosine(col("embedding"), q))
       .select(col("vec_id"), col("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
@@ -526,7 +522,7 @@ object Ann {
     spark.read.parquet(path)
       .where(col("list").isin(probe: _*))
       .select(col("vec_id"), col("embedding"))
-      .withColumn("sim", nativeCosine(spark, col("embedding"), q))
+      .withColumn("sim", nativeCosine(col("embedding"), q))
       .select(col("vec_id"), col("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
@@ -544,7 +540,7 @@ object Ann {
     val b = bucketed(embeddings, mat)
     val q = lit(query.toArray)
     b.where(bit_count(col("bucket").bitwiseXOR(lit(qSig))) <= probeRadius)
-      .withColumn("sim", nativeCosine(embeddings.sparkSession, col("e"), q))
+      .withColumn("sim", nativeCosine(col("e"), q))
       .select(col("vec_id"), col("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)

@@ -315,7 +315,6 @@ object Dedup {
   /** docs(doc_id, text) → (doc_id, simhash: long), via the native
     * codegen'd expression (identical bits to [[simHashHof]]). */
   def simHashes(docs: DataFrame): DataFrame = {
-    graft.functions.SimHash64.register(docs.sparkSession)
     spread(docs)
       .select(col("doc_id"),
         graft.functions.SimHash64(split(col("text"), " ")).as("simhash"))

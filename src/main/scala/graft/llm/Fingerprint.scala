@@ -16,7 +16,6 @@ object Fingerprint {
     * bit-identical). */
   def fingerprints(docs: DataFrame, textCol: String = "text",
                    k: Int = 8, window: Int = 4): DataFrame = {
-    graft.functions.WinnowFps.register(docs.sparkSession)
     // spread first — single-row-group parquet otherwise pins this
     // CPU-bound kernel to one task (see fingerprintsHof's note);
     // Dedup.spread is the ONE copy of the parallelism sizing rule
@@ -145,7 +144,6 @@ object Fingerprint {
     * dominated x55's bench cost. */
   def fingerprintsPortable(docs: DataFrame, textCol: String = "text",
                            k: Int = 8, window: Int = 4): DataFrame = {
-    graft.functions.WinnowFpsMd5.register(docs.sparkSession)
     Dedup.spread(docs)
       .withColumn("fps", graft.functions.WinnowFpsMd5(col(textCol), k, window))
   }
@@ -256,18 +254,6 @@ object Fingerprint {
       invAll.groupBy("fp").agg(count(lit(1)).as("df"))
         .where(col("df") <= maxDf).select("fp"),
       "fp")
-  }
-
-  /** The gate's decision for `docs` under the portable family,
-    * recomputed from the same statistics [[containmentPortable]] would
-    * use — a diagnostic surface for soak modes that record WHICH kernel
-    * a corpus takes (SCALE.md §30); no mutable state. */
-  private[graft] def wouldUseDensePortable(docs: DataFrame,
-                                           minContainBp: Long,
-                                           maxDf: Int = Int.MaxValue): Boolean = {
-    val fps = fingerprintsPortable(docs).select(col("doc_id"),
-      size(col("fps")).as("n"), col("fps")).where(col("n") > 0)
-    useDense(fps, cappedInv(fps, maxDf), minContainBp)
   }
 
   private def useDense(fps: DataFrame, inv: DataFrame,

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions._
@@ -140,11 +140,6 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
 
 /** DataFrame-level builder. */
 object AsOf {
-  /** Register the planning strategy on a session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfStrategy))
-      spark.experimental.extraStrategies ++= Seq(AsOfStrategy)
-
   /** left asof-join right: latest `right` row per `on` group with
     * rightTs <= leftTs; right columns null when no such row. Columns are
     * named (not Column exprs): Spark 4 Columns carry unresolved
@@ -155,7 +150,7 @@ object AsOf {
            leftTs: String, rightTs: String,
            rightTieBreak: String): DataFrame = {
     val spark = left.sparkSession
-    register(spark)
+    graft.GraftExtensions.install(spark)
     val lp = GraftBridge.plan(left)
     val rp = GraftBridge.plan(right)
     def resolve(name: String, p: LogicalPlan): Expression =

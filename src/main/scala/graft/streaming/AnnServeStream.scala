@@ -45,7 +45,6 @@ object AnnServeStream {
                   k: Int, nProbe: Int): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
-    graft.functions.CosineSim.register(spark) // idempotent
     val centDf = cents.toSeq.toDF("list", "c")
     // probe ranking stays on the HOF cosine: it scores batch × nLists
     // rows against double centroid literals — probe-table-sized, never
@@ -115,8 +114,6 @@ object AnnServeStream {
                      k: Int, nProbe: Int, refine: Int = 10): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
-    graft.functions.CosineSim.register(spark)
-    graft.functions.PqLutScore.register(spark)
     val centDf = idx.centroids.toSeq.toDF("list", "c")
     val qp = batch.select(col("qid"), col("embedding").as("qf"),
       transform(col("embedding"), x => x.cast("double")).as("q"))

@@ -58,7 +58,6 @@ object NearDupStream {
     * (doc_id, is_dup) — drain in "append" output mode. */
   def nearDupFlags(docs: DataFrame, maxHamming: Int = 6,
                    maxPerBucket: Int = Int.MaxValue): DataFrame = {
-    graft.functions.SimHash64.register(docs.sparkSession)
     sigNearDupFlags(
       docs.select(col("doc_id"),
         graft.functions.SimHash64(split(col("text"), " ")).as("simhash")),

@@ -15,11 +15,11 @@ object GraftBridge {
 
   def expr(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Expression → Column, session-independently: call_function resolves
-    * by NAME at analysis time against the DataFrame's own session, so a
-    * Column built from it fails on a session never prepped by
-    * Catalog.ensure/GraftExtensions (ADVICE r12 #1). Wrapping the
-    * expression directly removes the registry from the path entirely. */
+  /** Expression → Column, session-independently: the Column carries the
+    * expression itself, so it analyzes on any session, whether or not
+    * graft's SQL functions are registered there. A Column that named
+    * the function instead would resolve it in the DataFrame's own
+    * session's registry at analysis time. */
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   def plan(df: DataFrame): LogicalPlan =

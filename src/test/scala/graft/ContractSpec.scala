@@ -82,6 +82,33 @@ class ContractSpec extends SparkSpec {
       named.distinct.sorted.mkString(", "))
   }
 
+  // Catalyst census: graft's SQL functions, optimizer rules and planner
+  // strategy are written down once, in GraftExtensions' table, which
+  // both the extensions entry point and Catalog.ensure read. A second
+  // registration path, or a Column wrapper that resolves its function
+  // by name instead of wrapping the expression, fails here.
+  test("Catalyst census: only GraftExtensions registers functions, rules and the strategy") {
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .toArray.map(_.toString).filter(_.endsWith(".scala")).toSeq
+    assert(sources.size > 50, s"src/main not found: ${sources.size} sources")
+    val (table, rest) = sources.partition(_.endsWith("/graft/GraftExtensions.scala"))
+    assert(table.size == 1, table)
+    val hooks = Seq("createOrReplaceTempFunction", "registerFunction", "injectFunction",
+      "call_function", "injectOptimizerRule", "injectPlannerStrategy",
+      "extraOptimizations", "extraStrategies")
+    val outside = for {
+      path <- rest
+      text = readText(path)
+      hook <- hooks if text.contains(hook)
+    } yield s"$path: $hook"
+    assert(outside.isEmpty, outside.mkString("\n"))
+    val registers = rest.filter(p => p.contains("/graft/functions/") || p.contains("/graft/plans/"))
+      .filterNot(_.endsWith("/Udfs.scala"))
+      .filter(p => """\bdef register\b""".r.findFirstIn(readText(p)).isDefined)
+    assert(registers.isEmpty, registers.mkString("\n"))
+    assert(readText("src/main/scala/graft/Catalog.scala").contains("GraftExtensions.install(spark)"))
+  }
+
   // perfbench's session() copies Bench's protocol settings; until it reads
   // them from the program, this guard catches the copy drifting. A key
   // set on one side only must be listed here with its reason, and the

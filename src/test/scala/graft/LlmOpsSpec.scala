@@ -121,7 +121,7 @@ class LlmOpsSpec extends SparkSpec {
 
   test("simhash: native expression == HOF reference, corpus + edge cases") {
     import spark.implicits._
-    graft.functions.SimHash64.register(spark)
+    GraftExtensions.install(spark)
     // every corpus doc, plus edges: "" splits to [""] (single empty
     // token), one-token doc (all votes ±1, no ties beyond bit identity)
     val edges = Seq((9000001L, ""), (9000002L, "solo"))
@@ -310,7 +310,7 @@ class LlmOpsSpec extends SparkSpec {
     }
     // null ladder parity: NULL array -> 64 null slots (the HOF shape),
     // empty array -> 64 null slots, null ELEMENTS skipped as array_min does
-    graft.functions.AffineMinSig.register(spark)
+    GraftExtensions.install(spark)
     val edge = spark.sql(
       """SELECT affine_minsig(cast(null AS ARRAY<BIGINT>), 8) AS a,
         |       affine_minsig(cast(array() AS ARRAY<BIGINT>), 8) AS b,

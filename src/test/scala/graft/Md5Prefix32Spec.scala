@@ -12,7 +12,7 @@ import graft.llm.HashFamily
 class Md5Prefix32Spec extends SparkSpec {
 
   test("md5_prefix32 == conv(substr(md5,1,8),16,10) on edge inputs") {
-    graft.functions.Md5Prefix32Expr.register(spark)
+    GraftExtensions.install(spark)
     import spark.implicits._
     val rows = Seq(
       "", "a", "ab", "abcdefgh", "the quick brown fox",

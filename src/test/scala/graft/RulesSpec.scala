@@ -237,6 +237,71 @@ class RulesSpec extends SparkSpec {
     }
     // and portablePerms is one shared instance per width (ADVICE r12 #2)
     assert(graft.llm.Dedup.portablePerms(4) eq graft.llm.Dedup.portablePerms(4))
+
+    // every Column-DSL wrapper in graft.functions analyzes on the virgin
+    // session, and agrees with its SQL name on a prepped one
+    import graft.functions._
+    val dsl = Seq(
+      CosineSim(col("g"), col("g")),
+      PqLutScore(col("codes"), col("lut")),
+      SimHash64(split(col("a"), " ")),
+      WinnowFps(col("b"), 3, 2),
+      WinnowFpsMd5(col("b"), 3, 2),
+      Md5Prefix32Expr(col("a")),
+      AffineMinSig(col("hvs"), 4),
+      FoldAccents(col("a")),
+      DamerauLevenshtein(col("b"), col("c")),
+      JaroWinkler(col("b"), col("c")),
+      AHash32(col("g")), DHash32(col("g")), AHash64(col("g")), DHash64(col("g")))
+    val sql = Seq(
+      "cosine_sim(g, g)", "pq_lut_score(codes, lut)", "simhash64(split(a, ' '))",
+      "winnow_fps(b, 3, 2)", "winnow_fps_md5(b, 3, 2)", "md5_prefix32(a)",
+      "affine_minsig(hvs, 4)", "fold_accents(a)", "damerau_levenshtein(b, c)",
+      "jaro_winkler(b, c)", "ahash32(g)", "dhash32(g)", "ahash64(g)", "dhash64(g)")
+    assert(sql.map(_.takeWhile(_ != '(')) == GraftExtensions.Functions.map(_.name),
+      "one DSL wrapper and one SQL call per table row, in table order")
+    def input(s: org.apache.spark.sql.SparkSession) = {
+      import org.apache.spark.sql.functions.{lit, typedLit}
+      s.range(1).select(lit("café au lait").as("a"), lit("martha").as("b"),
+        lit("marhta").as("c"), typedLit(Array(1.0f, 5.0f, 1.0f, 5.0f)).as("g"),
+        typedLit(Array(0, 1)).as("codes"), typedLit(Array(0.5, 1.5, 2.5, 3.5)).as("lut"),
+        typedLit(Array(7L, 11L)).as("hvs"))
+    }
+    val viaDsl = input(s3).select(dsl: _*).head().toSeq
+    GraftExtensions.install(spark)
+    val viaSql = input(spark).selectExpr(sql: _*).head().toSeq
+    assert(viaDsl == viaSql)
+  }
+
+  test("every SQL function rejects a wrong argument count by name, on both paths") {
+    // Catalog.ensure and spark.sql.extensions install the same table, so
+    // both must raise the table's named arity error, not an
+    // IndexOutOfBoundsException from the builder
+    def check(s: org.apache.spark.sql.SparkSession, path: String): Unit =
+      GraftExtensions.Functions.foreach { f =>
+        Seq(f.arity - 1, f.arity + 1).foreach { n =>
+          val call = s"${f.name}(${Seq.fill(n)("'x'").mkString(", ")})"
+          val e = intercept[IllegalArgumentException](s.sql(s"SELECT $call").collect())
+          assert(e.getMessage.contains(s"${f.name} expects ${f.arity} argument"),
+            s"$path, $call: ${e.getMessage}")
+        }
+      }
+    val ensured = spark.newSession()
+    Catalog.ensure(ensured, sf0001)
+    check(ensured, "Catalog.ensure")
+    val old = org.apache.spark.sql.SparkSession.getDefaultSession
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    try {
+      val ext = org.apache.spark.sql.SparkSession.builder()
+        .withExtensions(new GraftExtensions)
+        .config("spark.sql.session.timeZone", "UTC")
+        .getOrCreate()
+      check(ext, "spark.sql.extensions")
+    } finally {
+      org.apache.spark.sql.SparkSession.clearActiveSession()
+      old.foreach(org.apache.spark.sql.SparkSession.setDefaultSession)
+    }
   }
 
   test("rewritten q38 equals the un-rewritten result") {
