@@ -106,8 +106,9 @@ object GraftExtensions {
 
   /** Install the table on a live session (idempotent): functions into
     * its registry (replacing same-named entries), rules and strategy
-    * into `spark.experimental` unless already there. */
-  def install(spark: SparkSession): Unit = {
+    * into `spark.experimental` unless already there. Serialized here so
+    * concurrent callers (Catalog.ensure, AsOf.join) cannot both append. */
+  def install(spark: SparkSession): Unit = synchronized {
     val registry = spark.sessionState.functionRegistry
     Functions.foreach(f => registry.registerFunction(f.id, f.info, f.builder))
     val exp = spark.experimental

@@ -40,9 +40,8 @@ object Md5Prefix32 {
 /** Scalar form of the portable-family content hash: `md5_prefix32(s)` ≡
   * `cast(conv(substr(md5(s),1,8),16,10) AS BIGINT)`, fused (no 32-char
   * hex render, no base-16 parse, thread-local digest). HashFamily.
-  * Portable routes through this when a session is available to resolve
-  * it; the SQL composition remains the definitional fallback and the
-  * equivalence is pinned in Md5Prefix32Spec. The win concentrates in
+  * Portable routes through this; the SQL composition remains the
+  * definitional form and the equivalence is pinned in Md5Prefix32Spec. The win concentrates in
   * HOF lambdas (minhash/simhash shingle hashing), which Spark evaluates
   * INTERPRETED per element — there the old form paid a three-expression
   * interpreted chain plus the hex round-trip per shingle. */

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.CosineSim
 
 /** Approximate nearest-neighbor search over an embedding column.
   *
@@ -36,21 +37,17 @@ object Ann {
   /** dot(a,b) via zip_with + aggregate. NOTE: HOFs are CodegenFallback
     * (interpreted lambda per element) — fine for index-sized inputs
     * (centroid ranking, anchor assignment), wrong for corpus-sized hot
-    * paths, which use [[nativeCosine]] instead (8.8× measured on the
-    * serving path, SCALE.md §44). */
+    * paths, which use the native [[graft.functions.CosineSim]] instead
+    * (8.8× measured on the serving path, SCALE.md §44). That kernel
+    * accepts float or double arrays per side and its arithmetic is
+    * bit-identical to [[cosine]] over the widened doubles (the oracle
+    * hashes of every consumer pin it). */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (s, x) => s + x)
 
   def norm(a: Column): Column = sqrt(aggregate(a, lit(0.0), (s, x) => s + x * x))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** The native codegen'd cosine (graft.functions.CosineSim) for
-    * corpus-sized scoring: accepts float or double arrays per side,
-    * arithmetic bit-identical to [[cosine]] over the widened doubles
-    * (CosineSim's contract — the oracle hashes of every consumer pin
-    * it). */
-  def nativeCosine(a: Column, b: Column): Column = graft.functions.CosineSim(a, b)
 
   /** Exact top-k by cosine vs a query vector: one narrow scan, the
     * native cosine kernel in whole-stage codegen, TakeOrdered. */
@@ -59,7 +56,7 @@ object Ann {
     embeddings
       .select(col("vec_id"), col("embedding"))
       .withColumn("sim",
-        nativeCosine(col("embedding"), q))
+        CosineSim(col("embedding"), q))
       .select(col("vec_id"), col("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
@@ -141,7 +138,7 @@ object Ann {
     val assigned = ivfAssign(base, cs)
     val q = lit(query.toArray)
     assigned.where(col("list").isin(probe: _*))
-      .withColumn("sim", nativeCosine(col("e"), q))
+      .withColumn("sim", CosineSim(col("e"), q))
       .select(col("vec_id"), col("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
@@ -331,7 +328,7 @@ object Ann {
     val q = lit(query.toArray)
     candidates.join(embeddings.select(col("vec_id"), col("embedding")), "vec_id")
       .withColumn("sim",
-        nativeCosine(col("embedding"), q))
+        CosineSim(col("embedding"), q))
       .select(col("vec_id"), col("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
@@ -358,7 +355,7 @@ object Ann {
       .dropDuplicates("a", "b")
     cands
       .withColumn("sim_bp",
-        floor(nativeCosine(col("ea"), col("eb"))
+        floor(CosineSim(col("ea"), col("eb"))
           * 10000.0).cast("long"))
       .where(col("sim_bp") >= minSimBp)
       .select(col("a"), col("b"), col("sim_bp"))
@@ -423,7 +420,7 @@ object Ann {
         col("x.vec_id") < col("y.vec_id"))
       .select(col("x.cluster_id").as("cluster_id"),
         col("x.vec_id").as("keep_id"), col("y.vec_id").as("drop_id"),
-        floor(nativeCosine(col("x.e"), col("y.e"))
+        floor(CosineSim(col("x.e"), col("y.e"))
           * 10000.0).cast("long").as("sim_bp"))
       .where(col("sim_bp") >= minSimBp)
       .orderBy(col("cluster_id"), col("keep_id"), col("drop_id"))
@@ -482,7 +479,7 @@ object Ann {
     val b = bucketed(embeddings, mat)
     val q = lit(query.toArray)
     b.where(col("bucket").isin(probeList: _*))
-      .withColumn("sim", nativeCosine(col("e"), q))
+      .withColumn("sim", CosineSim(col("e"), q))
       .select(col("vec_id"), col("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
@@ -504,7 +501,7 @@ object Ann {
     spark.read.parquet(path)
       .where(col("bucket").isin(probeList: _*))
       .select(col("vec_id"), col("embedding"))
-      .withColumn("sim", nativeCosine(col("embedding"), q))
+      .withColumn("sim", CosineSim(col("embedding"), q))
       .select(col("vec_id"), col("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
@@ -522,7 +519,7 @@ object Ann {
     spark.read.parquet(path)
       .where(col("list").isin(probe: _*))
       .select(col("vec_id"), col("embedding"))
-      .withColumn("sim", nativeCosine(col("embedding"), q))
+      .withColumn("sim", CosineSim(col("embedding"), q))
       .select(col("vec_id"), col("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
@@ -540,7 +537,7 @@ object Ann {
     val b = bucketed(embeddings, mat)
     val q = lit(query.toArray)
     b.where(bit_count(col("bucket").bitwiseXOR(lit(qSig))) <= probeRadius)
-      .withColumn("sim", nativeCosine(col("e"), q))
+      .withColumn("sim", CosineSim(col("e"), q))
       .select(col("vec_id"), col("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
