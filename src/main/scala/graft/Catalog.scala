@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -79,6 +80,28 @@ object Catalog {
     walk(root, "").mkString("\n")
   }
 
+  /** Runs `write` unless the file `sentinel` already holds `stamp`, then
+    * writes `stamp` into it LAST, so a run cut short mid-write leaves no
+    * matching sentinel and the next call writes again. The stamp is a
+    * source [[fingerprint]], so a changed source rewrites too. Through
+    * the Hadoop filesystem, so a sentinel that is Spark's own `_SUCCESS`
+    * marker keeps its checksum file in step. True when it wrote. */
+  def writeOnce(spark: SparkSession, sentinel: String, stamp: String)(write: => Unit): Boolean = {
+    val path = new Path(sentinel)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val held = scala.util.Try {
+      val in = fs.open(path)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }.toOption
+    val fresh = held.contains(stamp)
+    if (!fresh) {
+      write
+      val out = fs.create(path, true)
+      try out.write(stamp.getBytes("UTF-8")) finally out.close()
+    }
+    !fresh
+  }
+
   // Parquet schema inference runs one Spark job per table (about 100 ms
   // against 35 ms with the schema supplied) on every fresh session that
   // registers the catalog. So inferred schemas are kept by source path,
@@ -94,7 +117,7 @@ object Catalog {
   /** `spark.read.parquet(path)`, inferring the schema only when no
     * cached one matches the source's fingerprint and the session's
     * inference confs. */
-  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
     // not a local source (missing, or another scheme): nothing to key on
     if (!new java.io.File(path).exists()) return spark.read.parquet(path)
     val key = (fingerprint(path) +:
@@ -149,9 +172,11 @@ object Catalog {
   }
 
   // Plan cache (prepared statements): repeated submissions of the same SQL
-  // against the same catalog state reuse the analyzed/optimized/compiled
-  // plan — Spark's planning+codegen costs 100-600ms per query, dwarfing
-  // execution at small SF. Keyed by (session, dir, sql); a dir switch
+  // against the same catalog state reuse the analyzed/optimized plan.
+  // Planning measures 15-17 ms per q-query (perfbench: build, optimize,
+  // physical); codegen is amortized by Spark's own codegen cache, which
+  // GraftExtensions.install sizes to hold the q-suite. Keyed by
+  // (session, dir, sql); a dir switch
   // yields different keys, so stale view bindings can't leak. Bounded
   // (simple size cap with full clear — an LRU would be overkill for a
   // per-session statement cache an order of magnitude above the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 
 /** The library's `spark.sql.extensions` entry point — the deployment
   * path for a cluster that wants graft's Catalyst surface WITHOUT
@@ -104,10 +105,22 @@ object GraftExtensions {
     * to its co-partitioned streaming merge. */
   val Strategy: plans.AsOfStrategy.type = plans.AsOfStrategy
 
+  /** Entries of Spark's JVM-wide codegen cache (generated class per
+    * (class loader, source) key; Spark's default holds 100). Measured
+    * working sets: interactive_q's 46 q-queries 426 classes (each
+    * whole-stage class is cached once under the driver's loader and
+    * once under the executor's), heavy_mix 168. The cache is 4 LRU
+    * segments, so the cap leaves each segment room over its quarter of
+    * the working set. A cached class holds about 25 KB of heap, so the
+    * cap bounds the cache near 25 MB; a run holds only what it compiles. */
+  val CodegenCacheEntries = 1024
+
   /** Install the table on a live session (idempotent): functions into
     * its registry (replacing same-named entries), rules and strategy
-    * into `spark.experimental` unless already there. Serialized here so
-    * concurrent callers (Catalog.ensure, AsOf.join) cannot both append. */
+    * into `spark.experimental` unless already there, and the codegen
+    * cache size ([[sizeCodegenCache]]). Serialized here so concurrent
+    * callers (Harness.session, Catalog.ensure, AsOf.join) cannot both
+    * append. */
   def install(spark: SparkSession): Unit = synchronized {
     val registry = spark.sessionState.functionRegistry
     Functions.foreach(f => registry.registerFunction(f.id, f.info, f.builder))
@@ -115,5 +128,31 @@ object GraftExtensions {
     val missing = Rules.filterNot(exp.extraOptimizations.contains)
     if (missing.nonEmpty) exp.extraOptimizations ++= missing
     if (!exp.extraStrategies.contains(Strategy)) exp.extraStrategies ++= Seq(Strategy)
+    if (!codegenCacheSettled) {
+      codegenCacheSettled = true
+      sizeCodegenCache(spark.sessionState.conf,
+        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+    }
+  }
+
+  /** Whether an install has already sized the cache, found it set, or
+    * said it was too late; the cache is sized once per JVM, so later
+    * sessions have nothing to do. */
+  private var codegenCacheSettled = false
+
+  /** The cache size is a static conf that `spark.conf.set` refuses, and
+    * Spark reads it once per JVM, when the first class compiles, from
+    * the conf of the session active on that thread. So it is written
+    * into `conf` directly, and only while nothing has compiled
+    * (`compiled` is the JVM's compile count) and `conf` does not already
+    * set it: an embedder's explicit value wins. After the first compile
+    * the size is fixed, and this says so on stderr. */
+  private[graft] def sizeCodegenCache(conf: SQLConf, compiled: Long): Unit = {
+    val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+    if (!conf.contains(key)) {
+      if (compiled == 0) conf.setConfString(key, CodegenCacheEntries.toString)
+      else System.err.println(s"[graft] $compiled classes compiled before the " +
+        s"first install: $key stays at ${conf.getConfString(key)}, not $CodegenCacheEntries")
+    }
   }
 }

@@ -43,14 +43,18 @@ object Harness {
     * `local-cluster[2,16,4096]` under spark-submit, SCALE.md §41/§42)
     * and [[BaseConf]]. `conf` entries are applied after the base, so a
     * caller may override any of them (Verify and Explain keep WARN
-    * logging). */
+    * logging). The session gets graft's Catalyst surface at once
+    * ([[GraftExtensions.install]]), so the codegen cache is sized
+    * before anything a caller runs compiles a class. */
   def session(app: String, conf: (String, String)*): SparkSession = {
     val base = Seq(
       "spark.master" -> sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
       "spark.app.name" -> app) ++ BaseConf
-    (base ++ conf).foldLeft(SparkSession.builder()) { case (b, (k, v)) =>
+    val spark = (base ++ conf).foldLeft(SparkSession.builder()) { case (b, (k, v)) =>
       b.config(k, v)
     }.getOrCreate()
+    GraftExtensions.install(spark)
+    spark
   }
 
   /** Wall seconds of one evaluation of `f`, with its result. */

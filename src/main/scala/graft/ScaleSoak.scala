@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -137,8 +136,9 @@ object ScaleSoak {
     * (each `<t>.parquet` a directory of part files, the layout real
     * pipelines read), with referentially consistent key offsets, so every
     * declared entry runs on it. A table is rewritten only when its
-    * `_SUCCESS` marker is missing, so a build cut short resumes at the
-    * table it was writing. Returns the tables written. */
+    * `_SUCCESS` marker is missing or does not hold `n` and the source
+    * table's fingerprint ([[Catalog.writeOnce]]), so a build cut short
+    * resumes at the table it was writing. Returns the tables written. */
   def buildFull(spark: SparkSession, sf: String, out: String, n: Int): Seq[String] = {
     val stride = 10 * 1000 * 1000L
     // repartition BEFORE the n× explode: the source tables are
@@ -167,11 +167,12 @@ object ScaleSoak {
       // their original nationkeys, lineitems their part/supp keys
       case _ => Catalog.load(spark, sf, t)
     }
-    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Catalog.tables.filterNot(t => fs.exists(new Path(s"$out/$t.parquet/_SUCCESS"))).map { t =>
-      System.err.println(s"[soak] writing ${n}x $t under $out")
-      copy(t).write.mode("overwrite").parquet(s"$out/$t.parquet")
-      t
+    Catalog.tables.filter { t =>
+      Catalog.writeOnce(spark, s"$out/$t.parquet/_SUCCESS",
+          s"${n}x ${Catalog.fingerprint(s"$sf/$t.parquet")}") {
+        System.err.println(s"[soak] writing ${n}x $t under $out")
+        copy(t).write.mode("overwrite").parquet(s"$out/$t.parquet")
+      }
     }
   }
 }

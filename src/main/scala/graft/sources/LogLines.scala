@@ -61,26 +61,24 @@ object LogLines {
     * entry (x328, VERDICT r10 #4): the sf corpus ships parquet only, so
     * the raw-text path is exercised by rendering `events` as log lines
     * into /tmp — 4 files, bucketed by user — and re-reading them through
-    * [[read]]. Written lazily once per source corpus; the _GRAFT_DONE
-    * sentinel carries a per-data-file (name, size, mtime) fingerprint of
+    * [[read]]. Written lazily once per source corpus
+    * ([[graft.Catalog.writeOnce]]); the _GRAFT_DONE sentinel carries a
+    * per-data-file (name, size, mtime) fingerprint of
     * the source events.parquet — [[graft.Catalog.fingerprint]], which
     * handles the flat-file driver corpus AND Spark-written directory
     * corpora (the 10×/100× soaks), where File.length/lastModified on the
     * directory itself would miss an in-place part rewrite — and is
     * written LAST so a run killed mid-write rebuilds. The dir key is
     * collision-proof ([[graft.Catalog.cacheKey]]). Spark's text scan
-    * skips `_`-prefixed files, so the sentinel never parses as a line. */
+    * skips `_`- and `.`-prefixed files, so neither the sentinel nor its
+    * checksum file parses as a line. */
   def ensureEventsFixture(spark: SparkSession, sfDir: String): String = {
     val dir = "/tmp/graft-logtext/" + graft.Catalog.cacheKey(sfDir)
-    val fingerprint = graft.Catalog.fingerprint(s"$sfDir/events.parquet")
-    val done = new java.io.File(dir, "_GRAFT_DONE")
-    val fresh = done.isFile &&
-      java.nio.file.Files.readString(done.toPath) == fingerprint
-    if (!fresh) {
+    graft.Catalog.writeOnce(spark, s"$dir/_GRAFT_DONE",
+        graft.Catalog.fingerprint(s"$sfDir/events.parquet")) {
       val events = graft.Catalog.load(spark, sfDir, "events")
       renderEvents(events.repartition(4, pmod(col("user_id"), lit(4L))))
         .write.mode("overwrite").text(dir)
-      java.nio.file.Files.writeString(done.toPath, fingerprint)
     }
     dir
   }

@@ -95,4 +95,45 @@ class BloomSkipSpec extends SparkSpec {
     assert(perFile <= k.toLong * (m / 64),
       s"manifest rows per file $perFile exceeds the dense bound")
   }
+
+  // x242 writes its bucketed copy of orders and the copy's Bloom manifest
+  // once per source corpus. Every part-file name carries its write job's
+  // id, so a rewrite would change the names.
+  test("x242: a second build starts no write job and keeps its part files") {
+    val root = new java.io.File(s"/tmp/graft_bloom/${Catalog.cacheKey(sf0001)}")
+    org.apache.commons.io.FileUtils.deleteDirectory(root)
+    def parts = Seq("orders", "orders_bloom").flatMap { d =>
+      Option(new java.io.File(root, d).list).toSeq.flatten.filter(_.startsWith("part-")).map(s"$d/" + _)
+    }.sorted
+    val writes = new java.util.concurrent.atomic.AtomicInteger
+    val recorder = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          writes.incrementAndGet()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(recorder)
+    // on the same listener bus: once its counters settle, the recorder
+    // has seen every event posted before them
+    val bus = Harness.listen(spark)
+    def build(): Int = {
+      bus.quiesce()
+      val w0 = writes.get
+      SparkEntry.queries("x242_bloom_skip")(spark, sf0001)
+      bus.quiesce()
+      writes.get - w0
+    }
+    try {
+      assert(build() == 2)
+      val first = parts
+      assert(first.exists(_.startsWith("orders/")) && first.exists(_.startsWith("orders_bloom/")), first)
+      assert(build() == 0)
+      assert(parts == first)
+    } finally {
+      spark.sparkContext.removeSparkListener(recorder)
+      spark.sparkContext.removeSparkListener(bus)
+    }
+  }
 }

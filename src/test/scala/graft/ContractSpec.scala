@@ -109,6 +109,24 @@ class ContractSpec extends SparkSpec {
     assert(readText("src/main/scala/graft/Catalog.scala").contains("GraftExtensions.install(spark)"))
   }
 
+  // Codegen cache census: the cache size is set in one place, by
+  // GraftExtensions.install, which every session the engine serves
+  // passes through. A second writer (a main's conf, a builder key) fails
+  // here.
+  test("codegen cache census: only GraftExtensions sets the cache size") {
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .toArray.map(_.toString).filter(_.endsWith(".scala")).toSeq
+    assert(sources.size > 50, s"src/main not found: ${sources.size} sources")
+    val names = Seq("spark.sql.codegen.cache.maxEntries", "CODEGEN_CACHE_MAX_ENTRIES")
+    val hits = for {
+      path <- sources
+      text = readText(path)
+      name <- names if text.contains(name)
+    } yield path -> name
+    assert(hits.map(_._1).forall(_.endsWith("/graft/GraftExtensions.scala")), hits.mkString("\n"))
+    assert(hits.map(_._2).contains("CODEGEN_CACHE_MAX_ENTRIES"), hits)
+  }
+
   // perfbench's session() copies Bench's protocol settings; until it reads
   // them from the program, this guard catches the copy drifting. A key
   // set on one side only must be listed here with its reason, and the

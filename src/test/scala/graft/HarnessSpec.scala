@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
+
 /** The measurement harness's own contracts: the core-count parser fails
   * loudly, the timer reports what it ran, the listener counts the
-  * stages the per-stage probe divides by, and its codegen count sees a
-  * cache miss but not a hit. */
+  * stages the per-stage probe divides by, its codegen count sees a
+  * cache miss but not a hit, and the codegen cache holds the q-suite. */
 class HarnessSpec extends SparkSpec {
 
   test("SPARK_GRAFT_CPUS: a malformed value fails, naming the variable") {
@@ -56,5 +58,45 @@ class HarnessSpec extends SparkSpec {
       assert((c1 - c0).codegenCompiles >= 1, s"${c1 - c0}")
       assert((c2 - c1).codegenCompiles == 0, s"${c2 - c1}")
     } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("codegen cache: sized before the first compile, an explicit size kept") {
+    val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+    val explicit = new SQLConf
+    explicit.setConfString(key, "77")
+    GraftExtensions.sizeCodegenCache(explicit, compiled = 0)
+    assert(explicit.getConfString(key) == "77")
+    val unset = new SQLConf
+    GraftExtensions.sizeCodegenCache(unset, compiled = 0)
+    assert(unset.getConfString(key) == GraftExtensions.CodegenCacheEntries.toString)
+    val late = new SQLConf
+    GraftExtensions.sizeCodegenCache(late, compiled = 5)
+    assert(!late.contains(key))
+    // the shared session came from Harness.session before any spec compiled
+    assert(spark.sessionState.conf.getConfString(key) ==
+      GraftExtensions.CodegenCacheEntries.toString)
+  }
+
+  // The q-suite's working set is about 400 generated classes (each
+  // whole-stage class is cached once per class loader, driver and
+  // executor), four times Spark's default cache of 100: with the default
+  // every pass evicts the previous one and compiles it all again.
+  test("codegen cache: a second pass over the 46 q-queries compiles nothing") {
+    val names = SparkEntry.queries.keys.filter(_.startsWith("q")).toSeq.sorted
+    assert(names.size == 46)
+    def pass(): Unit = names.foreach(n => SparkEntry.queries(n)(spark, sf0001).collect())
+    val cacheWas = Catalog.planCacheEnabled
+    Catalog.planCacheEnabled = false
+    val l = Harness.listen(spark)
+    try {
+      pass()
+      val c1 = l.quiesce()
+      pass()
+      val d = l.quiesce() - c1
+      assert(d.codegenCompiles == 0, s"second pass compiled ${d.codegenCompiles} classes")
+    } finally {
+      spark.sparkContext.removeSparkListener(l)
+      Catalog.planCacheEnabled = cacheWas
+    }
   }
 }
