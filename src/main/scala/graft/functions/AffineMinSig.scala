@@ -28,10 +28,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * element, so the HOF form paid numHashes × |shingles| boxed
   * multiply-mod closure dispatches per row — measured at ~1.7 s per full
   * corpus pass at sf0.1 (SCALE.md §30), a visible slice of every
-  * MinHash entry (x52/x74/x89/x118/x177). This loop is numHashes ×
-  * |shingles| primitive ops. The 2⁵³ exactness invariant is inherited:
-  * hv < 2³² (both hash families) and portablePerms' a < 2²¹ keep
-  * hv·a + b < 2⁵³, the window both engines evaluate exactly. */
+  * MinHash entry (x52/x74/x89/x118/x177). This kernel
+  * ([[AffineMinSig.compute]], which `eval` and the generated code both
+  * call) is numHashes × |shingles| primitive ops. The 2⁵³ exactness
+  * invariant is inherited: hv < 2³² (both hash families) and
+  * portablePerms' a < 2²¹ keep hv·a + b < 2⁵³, the window both engines
+  * evaluate exactly. */
 case class AffineMinSig(child: Expression, numHashes: Int)
     extends UnaryExpression {
 
@@ -50,12 +52,38 @@ case class AffineMinSig(child: Expression, numHashes: Int)
   override def nullable: Boolean = false
   override def prettyName: String = "affine_minsig"
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return nullSig
-    val arr = v.asInstanceOf[ArrayData]
+  override def eval(input: InternalRow): Any =
+    AffineMinSig.compute(child.eval(input).asInstanceOf[ArrayData], as, bs, nullSig)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val childGen = child.genCode(ctx)
+    val asRef = ctx.addReferenceObj("affineAs", as, "long[]")
+    val bsRef = ctx.addReferenceObj("affineBs", bs, "long[]")
+    val nullSigRef = ctx.addReferenceObj("affineNullSig", nullSig,
+      classOf[GenericArrayData].getName)
+    ev.copy(code = code"""
+      ${childGen.code}
+      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
+        graft.functions.AffineMinSig.compute(${childGen.isNull}
+          ? (org.apache.spark.sql.catalyst.util.ArrayData) null : ${childGen.value},
+          $asRef, $bsRef, $nullSigRef);
+    """, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object AffineMinSig {
+  /** The kernel `eval` and generated code both call: `nullSig` for a
+    * NULL, empty or all-NULL `arr`, else slot i = min over the non-NULL
+    * hashes of (hv·as(i) + bs(i)) mod 2³¹−1. */
+  def compute(arr: ArrayData, as: Array[Long], bs: Array[Long],
+              nullSig: ArrayData): ArrayData = {
+    if (arr == null) return nullSig
     val n = arr.numElements()
-    val mins = Array.fill(numHashes)(Long.MaxValue)
+    val mins = new Array[Long](as.length)
+    java.util.Arrays.fill(mins, Long.MaxValue)
     var any = false
     var e = 0
     while (e < n) {
@@ -63,7 +91,7 @@ case class AffineMinSig(child: Expression, numHashes: Int)
         any = true
         val hv = arr.getLong(e)
         var i = 0
-        while (i < numHashes) {
+        while (i < as.length) {
           val x = (hv * as(i) + bs(i)) % 2147483647L
           if (x < mins(i)) mins(i) = x
           i += 1
@@ -74,55 +102,6 @@ case class AffineMinSig(child: Expression, numHashes: Int)
     if (any) UnsafeArrayData.fromPrimitiveArray(mins) else nullSig
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val asRef = ctx.addReferenceObj("affineAs", as, "long[]")
-    val bsRef = ctx.addReferenceObj("affineBs", bs, "long[]")
-    val nullSigRef = ctx.addReferenceObj("affineNullSig", nullSig,
-      classOf[GenericArrayData].getName)
-    val arr = ctx.freshName("arr")
-    val n = ctx.freshName("n")
-    val mins = ctx.freshName("mins")
-    val any = ctx.freshName("any")
-    val e = ctx.freshName("e")
-    val hv = ctx.freshName("hv")
-    val i = ctx.freshName("i")
-    val x = ctx.freshName("x")
-    ev.copy(code = code"""
-      ${childGen.code}
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value};
-      if (${childGen.isNull}) {
-        ${ev.value} = $nullSigRef;
-      } else {
-        org.apache.spark.sql.catalyst.util.ArrayData $arr = ${childGen.value};
-        int $n = $arr.numElements();
-        long[] $mins = new long[$numHashes];
-        java.util.Arrays.fill($mins, Long.MAX_VALUE);
-        boolean $any = false;
-        for (int $e = 0; $e < $n; $e++) {
-          if (!$arr.isNullAt($e)) {
-            $any = true;
-            long $hv = $arr.getLong($e);
-            for (int $i = 0; $i < $numHashes; $i++) {
-              long $x = ($hv * $asRef[$i] + $bsRef[$i]) % 2147483647L;
-              if ($x < $mins[$i]) $mins[$i] = $x;
-            }
-          }
-        }
-        ${ev.value} = $any
-          ? (org.apache.spark.sql.catalyst.util.ArrayData)
-              org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-                .fromPrimitiveArray($mins)
-          : (org.apache.spark.sql.catalyst.util.ArrayData) $nullSigRef;
-      }
-    """, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object AffineMinSig {
   /** Column-DSL form: wraps the expression directly, so it analyzes on
     * any session. */
   def apply(hvs: Column, numHashes: Int): Column =

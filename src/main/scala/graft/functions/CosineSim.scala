@@ -14,7 +14,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * every element evaluation walks an interpreted lambda, and the
   * cast-to-double transform materializes a boxed intermediate array per
   * row. This expression generates a tight primitive loop inside
-  * whole-stage codegen: no allocation, no boxing, one pass.
+  * whole-stage codegen: no allocation, no boxing, one pass. It is the one
+  * kernel whose loop is written twice (`nullSafeEval` and `doGenCode`):
+  * called as a shared Scala method from generated code it cost its users
+  * up to 45% (x49, SCALE.md §58). KernelPathsSpec holds the two
+  * bit-identical.
   *
   * Each side independently accepts array<float> or array<double>
   * (floats widen per element — exact, so float/double mixing is

@@ -21,8 +21,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * the bulk tier's hot path, the same corpus-sized-scoring class the
   * native cosine covers for exact rerank. A HOF composition
   * (zip_with over a sequence index) would be CodegenFallback:
-  * interpreted lambda per element, boxed intermediates. This is a
-  * tight primitive loop inside whole-stage codegen.
+  * interpreted lambda per element, boxed intermediates. This is one
+  * primitive loop ([[PqLutScore.compute]]), which `eval` and the
+  * generated code inside whole-stage codegen both call.
   *
   * ksub is derived per row as lut.length / codes.length; a lut whose
   * length is not a multiple of the code count, an empty code array, or
@@ -47,9 +48,28 @@ case class PqLutScore(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "pq_lut_score"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val codes = a.asInstanceOf[ArrayData]
-    val lut = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    PqLutScore.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val r = ctx.freshName("r")
+      s"""
+         |java.lang.Double $r = graft.functions.PqLutScore.compute($a, $b);
+         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object PqLutScore {
+  /** The kernel `eval` and generated code both call: NULL (Java null)
+    * for a misaligned LUT, an empty code array, a NULL or out-of-range
+    * code, or a NULL LUT entry it reads. */
+  def compute(codes: ArrayData, lut: ArrayData): java.lang.Double = {
     val m = codes.numElements()
     val n = lut.numElements()
     if (m == 0 || n % m != 0) return null
@@ -66,41 +86,6 @@ case class PqLutScore(left: Expression, right: Expression)
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val m = ctx.freshName("m")
-      val n = ctx.freshName("n")
-      val ksub = ctx.freshName("ksub")
-      val s = ctx.freshName("s")
-      val mi = ctx.freshName("mi")
-      val c = ctx.freshName("c")
-      s"""
-         |int $m = $a.numElements();
-         |int $n = $b.numElements();
-         |if ($m == 0 || $n % $m != 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $ksub = $n / $m;
-         |  double $s = 0.0;
-         |  for (int $mi = 0; $mi < $m; $mi++) {
-         |    if ($a.isNullAt($mi)) { ${ev.isNull} = true; break; }
-         |    int $c = $a.getInt($mi);
-         |    if ($c < 0 || $c >= $ksub || $b.isNullAt($mi * $ksub + $c)) {
-         |      ${ev.isNull} = true; break;
-         |    }
-         |    $s += $b.getDouble($mi * $ksub + $c);
-         |  }
-         |  if (!${ev.isNull}) { ${ev.value} = $s; }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object PqLutScore {
   /** Column-DSL form: wraps the expression directly, so it analyzes on
     * any session. */
   def apply(a: Column, b: Column): Column =

@@ -19,9 +19,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   *
   * Why an Expression: the HOF form runs 64 interpreted aggregate()
   * passes over each token-hash array — ~64·|tokens| lambda-tree
-  * evaluations per row (CodegenFallback, boxed accumulators). This
-  * generates one tight primitive loop inside whole-stage codegen:
-  * hash each token once, update an int[64] vote table, pack. Same
+  * evaluations per row (CodegenFallback, boxed accumulators). This is
+  * one primitive loop ([[SimHash64.compute]]), which `eval` and the
+  * generated code inside whole-stage codegen both call: hash each
+  * token once, update an int[64] vote table, pack. Same
   * integer arithmetic, so swapping it under the spec-checked x53
   * operator cannot move a result.
   */
@@ -35,8 +36,20 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    SimHash64.compute(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.SimHash64.compute($a);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object SimHash64 {
+  /** The kernel `eval` and generated code both call. */
+  def compute(arr: ArrayData): Long = {
     val n = arr.numElements()
     val votes = new Array[Int](64)
     var i = 0
@@ -61,38 +74,6 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     sig
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val votes = ctx.freshName("votes")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      val b = ctx.freshName("b")
-      val sig = ctx.freshName("sig")
-      s"""
-         |int $n = $a.numElements();
-         |int[] $votes = new int[64];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = $a.isNullAt($i) ? 42L :
-         |    org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
-         |      $a.getUTF8String($i), 42L);
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    $votes[$b] += ((($h >>> $b) & 1L) == 1L) ? 1 : -1;
-         |  }
-         |}
-         |long $sig = 0L;
-         |for (int $b = 0; $b < 64; $b++) {
-         |  $sig = ($sig << 1) | ($votes[$b] > 0 ? 1L : 0L);
-         |}
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object SimHash64 {
   /** Column-DSL form: wraps the expression directly, so it analyzes on
     * any session. */
   def apply(words: Column): Column =

@@ -2,10 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native winnowing fingerprint extraction (Schleimer/Wilkerson/Aiken '03):
   * xxhash64 (seed 42, Spark's SQL function) of every k-char substring,
@@ -25,8 +25,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * row, then runs interpreted array_min(slice(...)) lambdas per window —
   * boxed longs, per-element closure dispatch, and (pre-Cols.bind) a
   * projection-collapse hazard that re-ran the whole extraction per
-  * consumer. This is one codegen'd loop: hash once into long[], scan
-  * window minima, dedup in a hash set. Measured at sf0.1 (x55 drive):
+  * consumer. This is one Scala kernel ([[WinnowFps.compute]]), which
+  * `eval` and the generated code inside whole-stage codegen both call:
+  * hash once into long[], scan window minima, dedup in a hash set.
+  * Measured at sf0.1 (x55 drive):
   * extraction 4.7 s → 0.6 s.
   */
 case class WinnowFps(child: Expression, k: Int, window: Int)
@@ -42,16 +44,36 @@ case class WinnowFps(child: Expression, k: Int, window: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "winnow_fps"
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
+  override def nullSafeEval(input: Any): Any =
+    WinnowFps.compute(input.asInstanceOf[UTF8String], k, window)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, s =>
+      s"${ev.value} = graft.functions.WinnowFps.compute($s, $k, $window);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object WinnowFps {
+  /** The kernel `eval` and generated code both call. */
+  def compute(s: UTF8String, k: Int, window: Int): UnsafeArrayData = {
     val nH = math.max(s.numChars() - (k - 1), 1)
     val hs = new Array[Long](nH)
     var i = 0
     while (i < nH) {
-      hs(i) = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUTF8String(s.substringSQL(i + 1, k), 42L)
+      hs(i) = XXH64.hashUTF8String(s.substringSQL(i + 1, k), 42L)
       i += 1
     }
+    windowMinima(hs, window)
+  }
+
+  /** The winnowing tail both fingerprint kernels share: the minimum of
+    * each window of `window` hashes (windows start at
+    * 0..max(hs.length - window, 0); a start past the full windows takes
+    * the short tail slice), distinct in first-occurrence order. */
+  private[functions] def windowMinima(hs: Array[Long], window: Int): UnsafeArrayData = {
+    val nH = hs.length
     val nW = math.max(nH - (window - 1), 1)
     val seen = new java.util.LinkedHashSet[java.lang.Long]()
     var j = 0
@@ -70,51 +92,6 @@ case class WinnowFps(child: Expression, k: Int, window: Int)
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val nH = ctx.freshName("nH")
-      val hs = ctx.freshName("hs")
-      val i = ctx.freshName("i")
-      val nW = ctx.freshName("nW")
-      val seen = ctx.freshName("seen")
-      val j = ctx.freshName("j")
-      val m = ctx.freshName("m")
-      val end = ctx.freshName("end")
-      val t = ctx.freshName("t")
-      val out = ctx.freshName("out")
-      val o = ctx.freshName("o")
-      val it = ctx.freshName("it")
-      s"""
-         |int $nH = java.lang.Math.max($s.numChars() - ${k - 1}, 1);
-         |long[] $hs = new long[$nH];
-         |for (int $i = 0; $i < $nH; $i++) {
-         |  $hs[$i] = org.apache.spark.sql.catalyst.expressions.XXH64
-         |    .hashUTF8String($s.substringSQL($i + 1, $k), 42L);
-         |}
-         |int $nW = java.lang.Math.max($nH - ${window - 1}, 1);
-         |java.util.LinkedHashSet<Long> $seen = new java.util.LinkedHashSet<Long>();
-         |for (int $j = 0; $j < $nW; $j++) {
-         |  long $m = $hs[$j];
-         |  int $end = java.lang.Math.min($j + $window, $nH);
-         |  for (int $t = $j + 1; $t < $end; $t++) {
-         |    if ($hs[$t] < $m) $m = $hs[$t];
-         |  }
-         |  $seen.add($m);
-         |}
-         |long[] $out = new long[$seen.size()];
-         |int $o = 0;
-         |java.util.Iterator<Long> $it = $seen.iterator();
-         |while ($it.hasNext()) { $out[$o++] = ((Long) $it.next()).longValue(); }
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object WinnowFps {
   /** Column-DSL form: wraps the expression directly, so it analyzes on
     * any session. */
   def apply(text: Column, k: Int = 8, window: Int = 4): Column =

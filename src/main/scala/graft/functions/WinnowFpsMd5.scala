@@ -84,7 +84,7 @@ object Md5Prefix32Expr {
 /** Native winnowing fingerprint extraction under the PORTABLE hash family
   * (md5-prefix 32-bit k-gram hashes, full-window minima only) — the twin
   * of [[WinnowFps]] (xxhash64, partial-window fallback), fused the same
-  * way: one primitive loop per row returning array<long>.
+  * way: one Scala kernel per row returning array<long>.
   *
   * Semantics are IDENTICAL to the HOF composition it replaces
   * ([[graft.llm.Fingerprint.fingerprintsHofWith]] under
@@ -105,7 +105,10 @@ object Md5Prefix32Expr {
   * extraction dominated x55's 8.3 s bench cost. This loop walks the
   * row's UTF-8 bytes once with two code-point pointers and hashes each
   * k-gram byte range in place (thread-local digest, no per-gram
-  * allocation beyond the hash array itself). */
+  * allocation beyond the hash array itself). `eval` and the generated
+  * code inside whole-stage codegen both call that one kernel
+  * ([[WinnowFpsMd5.compute]]); the window-minima tail is
+  * [[WinnowFps]]'s. */
 case class WinnowFpsMd5(child: Expression, k: Int, window: Int)
     extends UnaryExpression {
   require(k >= 1 && window >= 1,
@@ -119,8 +122,20 @@ case class WinnowFpsMd5(child: Expression, k: Int, window: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "winnow_fps_md5"
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String]
+  override def nullSafeEval(input: Any): Any =
+    WinnowFpsMd5.compute(input.asInstanceOf[UTF8String], k, window)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, s =>
+      s"${ev.value} = graft.functions.WinnowFpsMd5.compute($s, $k, $window);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object WinnowFpsMd5 {
+  /** The kernel `eval` and generated code both call. */
+  def compute(s: UTF8String, k: Int, window: Int): UnsafeArrayData = {
     val n = s.numChars()
     val nH = math.max(n - (k - 1), 1)
     if (nH < window)
@@ -146,88 +161,10 @@ case class WinnowFpsMd5(child: Expression, k: Int, window: Int)
       hs(i) = Md5Prefix32.hash(b, start, end - start)
       i += 1
     }
-    val nW = nH - (window - 1)
-    val seen = new java.util.LinkedHashSet[java.lang.Long]()
-    var j = 0
-    while (j < nW) {
-      var m = hs(j)
-      var t = j + 1
-      val wEnd = j + window
-      while (t < wEnd) { if (hs(t) < m) m = hs(t); t += 1 }
-      seen.add(m)
-      j += 1
-    }
-    val out = new Array[Long](seen.size)
-    val it = seen.iterator()
-    var o = 0
-    while (it.hasNext) { out(o) = it.next(); o += 1 }
-    UnsafeArrayData.fromPrimitiveArray(out)
+    // nH >= window, so every window is full and none takes a short tail
+    WinnowFps.windowMinima(hs, window)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val nH = ctx.freshName("nH")
-      val b = ctx.freshName("b")
-      val hs = ctx.freshName("hs")
-      val end = ctx.freshName("end")
-      val c = ctx.freshName("c")
-      val start = ctx.freshName("start")
-      val i = ctx.freshName("i")
-      val nW = ctx.freshName("nW")
-      val seen = ctx.freshName("seen")
-      val j = ctx.freshName("j")
-      val m = ctx.freshName("m")
-      val wEnd = ctx.freshName("wEnd")
-      val t = ctx.freshName("t")
-      val out = ctx.freshName("out")
-      val o = ctx.freshName("o")
-      val it = ctx.freshName("it")
-      s"""
-         |int $nH = java.lang.Math.max($s.numChars() - ${k - 1}, 1);
-         |if ($nH < $window) {
-         |  ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |    .fromPrimitiveArray(new long[0]);
-         |} else {
-         |  byte[] $b = $s.getBytes();
-         |  long[] $hs = new long[$nH];
-         |  int $end = 0;
-         |  // min(k, numChars): window = 1 admits strings shorter than k,
-         |  // where position 1's gram is the whole string (substr's clamp)
-         |  for (int $c = java.lang.Math.min($k, $s.numChars()); $c > 0; $c--) {
-         |    $end += org.apache.spark.unsafe.types.UTF8String.numBytesForFirstByte($b[$end]);
-         |  }
-         |  $hs[0] = graft.functions.Md5Prefix32.hash($b, 0, $end);
-         |  int $start = 0;
-         |  for (int $i = 1; $i < $nH; $i++) {
-         |    $start += org.apache.spark.unsafe.types.UTF8String.numBytesForFirstByte($b[$start]);
-         |    $end += org.apache.spark.unsafe.types.UTF8String.numBytesForFirstByte($b[$end]);
-         |    $hs[$i] = graft.functions.Md5Prefix32.hash($b, $start, $end - $start);
-         |  }
-         |  int $nW = $nH - ${window - 1};
-         |  java.util.LinkedHashSet<Long> $seen = new java.util.LinkedHashSet<Long>();
-         |  for (int $j = 0; $j < $nW; $j++) {
-         |    long $m = $hs[$j];
-         |    int $wEnd = $j + $window;
-         |    for (int $t = $j + 1; $t < $wEnd; $t++) {
-         |      if ($hs[$t] < $m) $m = $hs[$t];
-         |    }
-         |    $seen.add($m);
-         |  }
-         |  long[] $out = new long[$seen.size()];
-         |  int $o = 0;
-         |  java.util.Iterator<Long> $it = $seen.iterator();
-         |  while ($it.hasNext()) { $out[$o++] = ((Long) $it.next()).longValue(); }
-         |  ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |    .fromPrimitiveArray($out);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object WinnowFpsMd5 {
   /** Column-DSL form: wraps the expression directly, so it analyzes on
     * any session. */
   def apply(text: Column, k: Int = 8, window: Int = 4): Column =

@@ -71,12 +71,11 @@ object Dedup {
     * twins — this is where that difference is confined.
     *
     * Round 12: the reduction itself is the fused native
-    * [[graft.functions.AffineMinSig]] when a session is available and
-    * `perms` is the canonical [[portablePerms]] table (every repo call
-    * site) — Spark runs HOF lambda bodies interpreted per element, so
-    * the composition below paid numHashes × |shingles| boxed closure
-    * dispatches per row (~1.7 s per sf0.1 corpus pass, SCALE.md
-    * §30). The HOF form remains the executable specification
+    * [[graft.functions.AffineMinSig]] when `perms` is the canonical
+    * [[portablePerms]] table (every repo call site) — Spark runs HOF
+    * lambda bodies interpreted per element, so the composition below
+    * paid numHashes × |shingles| boxed closure dispatches per row
+    * (~1.7 s per sf0.1 corpus pass, SCALE.md §30). The HOF form remains the executable specification
     * ([[affineSignatureHof]], LlmOpsSpec holds the two bit-identical,
     * nulls included). */
   def affineSignature(shs: Column, perms: Seq[(Long, Long)],
@@ -313,7 +312,8 @@ object Dedup {
   }
 
   /** docs(doc_id, text) → (doc_id, simhash: long), via the native
-    * codegen'd expression (identical bits to [[simHashHof]]). */
+    * expression, whose one Scala kernel generated code calls
+    * (identical bits to [[simHashHof]]). */
   def simHashes(docs: DataFrame): DataFrame = {
     spread(docs)
       .select(col("doc_id"),

@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions._
 object Fingerprint {
 
   /** Winnowing fingerprint set: min hash of each sliding window of
-    * `window` consecutive k-gram hashes, deduplicated. One fused
-    * codegen'd loop per row (functions.WinnowFps — same xxhash64/substr
-    * semantics as [[fingerprintsHof]], which LlmOpsSpec holds
-    * bit-identical). */
+    * `window` consecutive k-gram hashes, deduplicated. One Scala kernel
+    * per row, called from generated code (functions.WinnowFps — same
+    * xxhash64/substr semantics as [[fingerprintsHof]], which LlmOpsSpec
+    * holds bit-identical). */
   def fingerprints(docs: DataFrame, textCol: String = "text",
                    k: Int = 8, window: Int = 4): DataFrame = {
     // spread first — single-row-group parquet otherwise pins this
@@ -137,9 +137,9 @@ object Fingerprint {
     * (The production [[fingerprints]] keeps its partial-window fallback
     * for tiny docs; the two differ only below `k + window - 1` chars.)
     *
-    * One fused codegen'd loop per row (functions.WinnowFpsMd5 — same
-    * md5-prefix/substr semantics as [[fingerprintsPortableHof]], which
-    * LlmOpsSpec holds bit-identical). The HOF form paid a substring
+    * One Scala kernel per row, called from generated code
+    * (functions.WinnowFpsMd5 — same md5-prefix/substr semantics as
+    * [[fingerprintsPortableHof]], which LlmOpsSpec holds bit-identical). The HOF form paid a substring
     * copy + md5 hex render + base-16 parse per CHARACTER position and
     * dominated x55's bench cost. */
   def fingerprintsPortable(docs: DataFrame, textCol: String = "text",

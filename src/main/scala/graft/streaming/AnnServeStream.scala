@@ -100,7 +100,7 @@ object AnnServeStream {
     *  3. ADC scoring over the DPP-pruned slice of the ENCODED layout
     *     ([[graft.sources.Layout.writeIvfEncodedPartitioned]]):
     *     sim ≈ (q·c + pq_lut_score(codes, lut)) / (|q|·|v|) — the
-    *     codegen'd [[graft.functions.PqLutScore]] kernel, no raw
+    *     native [[graft.functions.PqLutScore]] kernel, no raw
     *     vectors touched;
     *  4. per-query top k×refine candidates → exact rerank on the RAW
     *     list-partitioned layout (DPP on the candidates' lists,

@@ -20,7 +20,8 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   * [[graft.llm.Dedup.simHashNearDups]]'s pair list — spec-checked.
   *
   * Mechanics, mirroring the batch operator's banding exactly:
-  *  - SimHash is the codegen'd native expression, row-local on arrival.
+  *  - SimHash is the native expression (one Scala kernel, called from
+  *    generated code), row-local on arrival.
   *  - The signature is banded into (maxHamming+1) chunks; pigeonhole
   *    guarantees two sigs within the radius share at least one exact
   *    chunk, so grouping by (chunk, chunkBits) routes every potential

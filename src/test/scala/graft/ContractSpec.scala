@@ -109,6 +109,30 @@ class ContractSpec extends SparkSpec {
     assert(readText("src/main/scala/graft/Catalog.scala").contains("GraftExtensions.install(spark)"))
   }
 
+  // Kernel census: each native kernel's algorithm is written once, in
+  // Scala, and both eval and the generated code call it. A doGenCode
+  // whose Java text loops is a second copy of a kernel; KernelPathsSpec
+  // holds the two execution paths bit-identical. CosineSim keeps its
+  // generated loop: called as a shared Scala kernel it cost its users up
+  // to 45% (x49, SCALE.md §58). The exemption fails once it is stale.
+  test("kernel census: no doGenCode in graft/functions writes a loop") {
+    val generatedLoops = Set("CosineSim.scala")
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/functions"))
+      .toArray.map(_.toString).filter(_.endsWith(".scala")).toSeq
+    val bodies = for {
+      path <- sources
+      lines = readText(path).linesIterator.toVector
+      (line, i) <- lines.zipWithIndex if line.contains("def doGenCode(")
+      indent = line.takeWhile(_ == ' ').length
+      body = lines.drop(i + 1).takeWhile(l => l.trim.isEmpty || l.takeWhile(_ == ' ').length > indent)
+    } yield s"$path:${i + 1}" -> body.mkString("\n")
+    assert(bodies.size >= GraftExtensions.Functions.size, bodies.map(_._1).mkString("\n"))
+    val loops = bodies.collect { case (at, body) if body.contains("for (") || body.contains("while (") => at }
+    val (exempt, rest) = loops.partition(at => generatedLoops.exists(f => at.contains(s"/$f:")))
+    assert(rest.isEmpty, s"doGenCode writes a loop:\n${rest.mkString("\n")}")
+    assert(exempt.size == generatedLoops.size, s"stale exemption: ${generatedLoops.mkString(", ")}")
+  }
+
   // Codegen cache census: the cache size is set in one place, by
   // GraftExtensions.install, which every session the engine serves
   // passes through. A second writer (a main's conf, a builder key) fails

@@ -216,7 +216,8 @@ object KernelPathsSpec {
           "da" -> ArrayType(DoubleType), "db" -> ArrayType(DoubleType)),
         rows(cosineRows),
         Seq("cosine_sim(fa, fb)", "cosine_sim(fa, db)", "cosine_sim(da, fb)",
-          "cosine_sim(da, db)")),
+          "cosine_sim(da, db)", "cosine_sim(fa, array(1.0D, -0.0D, 2.5D))",
+          "cosine_sim(array(cast(1.0 AS FLOAT), cast(NULL AS FLOAT), cast(3.0 AS FLOAT)), db)")),
       "pq_lut_score" -> Probe(
         schema("codes" -> ArrayType(IntegerType), "lut" -> ArrayType(DoubleType)),
         rows(pqRows), Seq("pq_lut_score(codes, lut)")),

@@ -92,7 +92,7 @@ class LlmOpsSpec extends SparkSpec {
     import spark.implicits._
     val half = docs.limit(3).select(col("doc_id") + 1000000L,
       substring(col("text"), 1, 200)).toDF("doc_id", "text")
-    val tiny = Seq((2000001L, "short")).toDF("doc_id", "text") // < k+window-1 chars
+    val tiny = Seq((2000001L, "short")).toDF("doc_id", "text").repartition(1) // < k+window-1 chars
     val all = docs.select("doc_id", "text").unionByName(half).unionByName(tiny)
     val hits = Fingerprint.containmentPortable(all, minContainBp = 9000L)
       .where(col("b") >= 1000000L)
@@ -125,7 +125,7 @@ class LlmOpsSpec extends SparkSpec {
     // every corpus doc, plus edges: "" splits to [""] (single empty
     // token), one-token doc (all votes ±1, no ties beyond bit identity)
     val edges = Seq((9000001L, ""), (9000002L, "solo"))
-      .toDF("doc_id", "text")
+      .toDF("doc_id", "text").repartition(1)
     val both = docs.select(col("doc_id"), col("text")).unionByName(edges)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"),
@@ -160,7 +160,7 @@ class LlmOpsSpec extends SparkSpec {
     // plant a copy of the query vector with tiny deterministic noise
     import spark.implicits._
     val planted = Seq((999999L, queryVec.map(x => (x + 1e-4).toFloat).toArray))
-      .toDF("vec_id", "embedding")
+      .toDF("vec_id", "embedding").repartition(1)
     val all = embs.select("vec_id", "embedding").where("vec_id <> 0")
       .unionByName(planted)
     val got = Ann.lshTopK(all, queryVec, k = 10).collect().map(_.getLong(0))
@@ -195,7 +195,7 @@ class LlmOpsSpec extends SparkSpec {
   test("multiprobe lsh: planted near-identical vector retrieved, 4 probes") {
     import spark.implicits._
     val planted = Seq((999999L, queryVec.map(x => (x + 1e-4).toFloat).toArray))
-      .toDF("vec_id", "embedding")
+      .toDF("vec_id", "embedding").repartition(1)
     val all = embs.select("vec_id", "embedding").where("vec_id <> 0")
       .unionByName(planted)
     val got = Ann.lshTopKMultiProbe(all, queryVec, k = 10, maxProbes = 4)
@@ -258,7 +258,7 @@ class LlmOpsSpec extends SparkSpec {
     // degenerate inputs: shorter than one k-gram / one window
     import spark.implicits._
     val edge = Seq((1L, ""), (2L, "ab"), (3L, "abcdefgh"), (4L, "abcdefghij"))
-      .toDF("doc_id", "text")
+      .toDF("doc_id", "text").repartition(1)
     val ne = Fingerprint.fingerprints(edge).select("doc_id", "fps").collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val he = Fingerprint.fingerprintsHof(edge).select("doc_id", "fps").collect()
@@ -286,7 +286,7 @@ class LlmOpsSpec extends SparkSpec {
       (5L, "abcdefghijk"), (6L, "abcdefghijkl"),
       (7L, "cafécafécafé"), (8L, "中文的文字符号中文的文字"),
       (9L, "a😀b😀c😀d😀e😀f😀g😀"), (10L, "añéíóúü日本語テキスト")
-    ).toDF("doc_id", "text")
+    ).toDF("doc_id", "text").repartition(1)
     val ne = fps(Fingerprint.fingerprintsPortable(edge))
     val he = fps(Fingerprint.fingerprintsPortableHof(edge))
     assert(ne == he)
@@ -351,10 +351,10 @@ class LlmOpsSpec extends SparkSpec {
     }
     // degenerate inputs: empty corpus and a single doc take the dense
     // path's early exits without error
-    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text").repartition(1)
     assert(Fingerprint.containmentPortableVia(
       empty, 1L, Int.MaxValue, dense = true).count() == 0)
-    val one = Seq((1L, "abcdefghijklmnop")).toDF("doc_id", "text")
+    val one = Seq((1L, "abcdefghijklmnop")).toDF("doc_id", "text").repartition(1)
     assert(Fingerprint.containmentPortableVia(
       one, 1L, Int.MaxValue, dense = true).count() == 0)
   }
@@ -363,7 +363,7 @@ class LlmOpsSpec extends SparkSpec {
     import spark.implicits._
     val two = docs.orderBy("doc_id").limit(2).collect()
     val concatenated = two(0).getAs[String]("text") + " " + two(1).getAs[String]("text")
-    val planted = Seq((888888L, concatenated)).toDF("doc_id", "text")
+    val planted = Seq((888888L, concatenated)).toDF("doc_id", "text").repartition(1)
     val all = docs.select("doc_id", "text").unionByName(planted)
     val hits = Fingerprint.containment(all, minContainBp = 9000L)
       .where(col("b") === 888888L && col("a") === two(0).getLong(0))
@@ -445,7 +445,7 @@ class LlmOpsSpec extends SparkSpec {
       (id, q.zipWithIndex.map { case (x, d) =>
         (x + (id - 999000L + 1) * 1e-4 * (if (d % 2 == 0) 1 else -1)).toFloat
       }.toArray)
-    }.toDF("vec_id", "embedding")
+    }.toDF("vec_id", "embedding").repartition(1)
     val withPlanted = corpus.select("vec_id", "embedding").unionByName(planted)
     val got = Ann.pqTopK(withPlanted, q, 10, nProbe = 4, idx = Some(idx))
       .collect().map(_.getLong(0)).toSet
