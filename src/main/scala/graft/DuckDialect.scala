@@ -8,24 +8,41 @@ import scala.util.matching.Regex
   * contract inventory uses and nothing else, so a query whose text needs
   * a delta outside the list keeps a hand-written oracle
   * (`Queries.q(name, spark, oracle)`). Quoted string literals pass
-  * through byte-for-byte: they are masked before any rule runs.
+  * through byte-for-byte: they are masked before any rule runs. A
+  * literal the two engines read differently is refused instead: Spark
+  * unescapes a backslash that DuckDB keeps (`'\\.'` is a different
+  * regex in each), and a double-quoted text is a Spark string but a
+  * DuckDB identifier.
   *
   * Spark plan hints carry no meaning for a result, so the rules drop
   * them: a hinted `(SELECT cols FROM t)` subquery reads as `t`, and a
   * bare hint comment goes. A hint thus stays in the one text, and no
   * oracle depends on its width (`SPARK_GRAFT_CPUS`).
   *
+  * A rule that emits an infix operator (`->>`) fires only where its
+  * output needs no parentheses.
+  *
   * Each rule folds at least one inventory entry; add a rule only with
-  * the entry it folds. DuckDialectSpec checks every rule and that no
-  * two-text entry is one the rewriter already reproduces; ContractSpec
-  * pins the digest of all oracle texts, so a rule change that alters an
-  * oracle byte fails there.
+  * the entry it folds. DuckDialectSpec checks every rule, that dropping
+  * any one of them changes some derived oracle, and that no two-text
+  * entry is one the rewriter reproduces up to whitespace and keyword
+  * case; ContractSpec pins the digest of all oracle texts, so a rule
+  * change that alters an oracle byte fails there.
   */
 object DuckDialect {
 
-  def apply(spark: String): String = {
+  def apply(spark: String): String = rewrite(spark, rules)
+
+  /** `spark` rewritten by `rules` ([[apply]] passes the full list);
+    * throws, naming the text, on a literal with a backslash or in
+    * double quotes. */
+  private[graft] def rewrite(spark: String, rules: Seq[String => String]): String = {
     val literals = Literal.findAllIn(spark).toVector
+    literals.find(_.contains('\\')).foreach(l =>
+      throw new IllegalArgumentException(s"backslash in literal $l: write the oracle by hand\n$spark"))
     val code = Literal.replaceAllIn(spark, _ => Regex.quoteReplacement(Mask))
+    if (code.contains('"'))
+      throw new IllegalArgumentException(s"double-quoted text: write the oracle by hand\n$spark")
     val rewritten = rules.foldLeft(code)((s, rule) => rule(s))
     val it = literals.iterator
     Masked.replaceAllIn(rewritten, _ => Regex.quoteReplacement(it.next()))
@@ -56,6 +73,10 @@ object DuckDialect {
     """\bmax_by\(""" -> "arg_max(",
     """\bmin_by\(""" -> "arg_min(",
     """\bcollect_set\(""" -> "list(DISTINCT ",
+    """\barray_max\(""" -> "list_max(",
+    """\bjaro_winkler\(""" -> "jaro_winkler_similarity(",
+    """\bfold_accents\(""" -> "strip_accents(",
+    """\bpercentile\(""" -> "quantile_cont(",
     """<=>""" -> "IS NOT DISTINCT FROM")
 
   private def regex(pattern: String, replacement: String): String => String = {
@@ -70,7 +91,7 @@ object DuckDialect {
   private val shingles = ("""\btransform\(sequence\(1, size\((\w+)\)-(\d+)\), (\w+) -> """ +
     """concat_ws\((""" + Mask + """), slice\(\1, \3, (\d+)\)\)\)""").r
 
-  private val rules: Seq[String => String] = Seq[String => String](
+  private[graft] val rules: Seq[String => String] = Seq[String => String](
     // (SELECT /*+ hint */ cols FROM t) → t, then any bare hint comment
     // is dropped: Spark plan hints carry no meaning for the result
     regex("""\(SELECT /\*\+ [^*]*\*/ \w+(?:, \w+)* FROM (\w+)\)""", "$1"),
@@ -102,7 +123,41 @@ object DuckDialect {
       },
       call("cosine_sim") { case Seq(a, b) =>
         s"cast(list_cosine_similarity(${a.trim}, ${b.trim}) AS DOUBLE)"
-      })
+      },
+      // array(a, …) → [a, …]
+      call("array") { case args => args.mkString("[", ",", "]") },
+      // f(args) IGNORE NULLS → f(args IGNORE NULLS), for a value or offset window function
+      regex("""\b((?:first|last|nth)_value|lead)\(((?:[^()]|\([^()]*\))*)\) IGNORE NULLS\b""",
+        "$1($2 IGNORE NULLS)"),
+      // slice(w, i, n) → w[i:i+n-1], for a list column w and a literal width n
+      call("slice") {
+        case Seq(w, i, n) if Word.matches(w.trim) && Digits.matches(n.trim) =>
+          val last = n.trim.toInt - 1
+          val to = if (Digits.matches(i.trim)) s"${i.trim.toInt + last}" else s"${i.trim}+$last"
+          s"${w.trim}[${i.trim}:$to]"
+      },
+      // concat_ws(s, w[i:j]) → array_to_string(w[i:j], s): joins a list slice
+      call("concat_ws") { case Seq(sep, l) if Sliced.matches(l.trim) =>
+        s"array_to_string(${l.trim},${leading(l)}${sep.trim})"
+      },
+      // get_json_object(p, 'k') → p->>'k', where the operator needs no parentheses
+      regex("""(?<=[(,]\s{0,8})get_json_object\(([\w.]+),\s*(""" + Mask + """)\)(?=\s*(?:[,)]|AS\b))""",
+        "$1->>$2"),
+      // regexp_replace(s, p, r) → regexp_replace(s, p, r, 'g'): Spark replaces every match
+      call("regexp_replace") { case args @ Seq(_, _, r) =>
+        s"regexp_replace(${args.mkString(",")},${leading(r)}'g')"
+      }) ++
+    // datediff(a, b) → datediff('day', b, a), under either Spark spelling
+    Seq("datediff", "date_diff").map(name => call(name) { case Seq(a, b) =>
+      s"$name('day', ${b.trim}, ${a.trim})"
+    })
+
+  private val Word = """\w+""".r
+  private val Digits = """\d+""".r
+  /** A slice `w[i:j]` of a list column, as the slice rule writes it. */
+  private val Sliced = """\w+\[[^\[\]]*\]""".r
+  /** The whitespace an argument starts with. */
+  private def leading(arg: String): String = arg.takeWhile(_.isWhitespace)
 
   /** Rewrites each call `name(args)` whose top-level argument list `f`
     * accepts, innermost first; other calls of `name` are left as they are. */

@@ -17,7 +17,7 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. Lazy val,
-    * not def: a def rebuilt the full ~330-entry map on EVERY access —
+    * not def: a def rebuilt the full 395-entry map on EVERY access —
     * including inside Bench's per-rep lookups and Verify's per-query
     * loop — for a value that never changes after class load. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
