@@ -31,12 +31,12 @@ import scala.util.matching.Regex
   */
 object DuckDialect {
 
-  def apply(spark: String): String = rewrite(spark, rules)
+  def apply(spark: String): String = derive(spark, rules)
 
   /** `spark` rewritten by `rules` ([[apply]] passes the full list);
     * throws, naming the text, on a literal with a backslash or in
     * double quotes. */
-  private[graft] def rewrite(spark: String, rules: Seq[String => String]): String = {
+  private[graft] def derive(spark: String, rules: Seq[String => String]): String = {
     val literals = Literal.findAllIn(spark).toVector
     literals.find(_.contains('\\')).foreach(l =>
       throw new IllegalArgumentException(s"backslash in literal $l: write the oracle by hand\n$spark"))
