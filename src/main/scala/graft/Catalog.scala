@@ -171,42 +171,16 @@ object Catalog {
     spark.table(table)
   }
 
-  // Plan cache (prepared statements): repeated submissions of the same SQL
-  // against the same catalog state reuse the analyzed/optimized plan.
-  // Planning measures 15-17 ms per q-query (perfbench: build, optimize,
-  // physical); codegen is amortized by Spark's own codegen cache, which
-  // GraftExtensions.install sizes to hold the q-suite. Keyed by
-  // (session, dir, sql); a dir switch
-  // yields different keys, so stale view bindings can't leak. Bounded
-  // (simple size cap with full clear — an LRU would be overkill for a
-  // per-session statement cache an order of magnitude above the
-  // inventory size).
-  private val planCacheMax = 512
-  private val planCache = new TrieMap[(SparkSession, String, String), DataFrame]()
+  /** Read by nothing: [[sql]] plans every text fresh. It stays only so
+    * the benchmark, which compiles these sources and still assigns it,
+    * keeps building; it goes with the benchmark change that drops that
+    * assignment. */
+  @deprecated var planCacheEnabled: Boolean = false
 
-  /** Plan-cache kill switch. The cache exists to amortize ANALYSIS of
-    * the 300+ big SQL texts across Verify/driver passes — but a reused
-    * DataFrame also reuses its RDD lineage, and Spark SKIPS already-
-    * computed shuffle map stages on resubmission (the DAGScheduler's
-    * map-output check), so a timing loop over the memoized object
-    * measures ONLY THE FINAL STAGE after rep 1. Discovered r13 from an
-    * impossibility: x74's 9.6M-row pipeline "ran" in 50 ms memoized vs
-    * 3.8 s fresh. Bench disables the cache for every timed set
-    * (SCALE.md §36); Verify keeps it (correctness, not timing). */
-  @volatile var planCacheEnabled: Boolean = true
-
+  /** `sqlText` planned fresh against `dir`'s tables, under the session's
+    * current conf. */
   def sql(spark: SparkSession, dir: String, sqlText: String): DataFrame = {
     ensure(spark, dir)
-    if (!planCacheEnabled) return spark.sql(sqlText)
-    if (planCache.size > planCacheMax) {
-      // weak keys cannot work here — the cached DataFrames back-
-      // reference their session, so the entry's VALUE would pin the
-      // weak KEY forever. Evict dead sessions' entries explicitly
-      // first; only if live entries alone still bust the cap, clear.
-      planCache.keys.filter(_._1.sparkContext.isStopped)
-        .foreach(planCache.remove)
-      if (planCache.size > planCacheMax) planCache.clear()
-    }
-    planCache.getOrElseUpdate((spark, dir, sqlText), spark.sql(sqlText))
+    spark.sql(sqlText)
   }
 }

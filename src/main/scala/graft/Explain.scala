@@ -12,9 +12,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else Seq("q16_multiway_join")
-    val spark = Harness.session("graft-explain",
-      "spark.sql.shuffle.partitions" -> Harness.cpus.toString,
-      "spark.log.level" -> "WARN")
+    val spark = Harness.session("graft-explain", "spark.log.level" -> "WARN")
 
     val e = SparkEntry.entry(spark)
     println(s"[explain] entry rows=${e.count()}")

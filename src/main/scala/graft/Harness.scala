@@ -27,8 +27,9 @@ object Harness {
         s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
   }
 
-  /** The run's core count: the local master's width and the
-    * [[Queries]] REPARTITION hint width. The only read of the variable. */
+  /** The run's core count: the local master's width, the default
+    * shuffle width and the [[Queries]] REPARTITION hint width. The only
+    * read of the variable. */
   lazy val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
 
   /** The settings every session shares: UTC session time zone, no UI,
@@ -40,15 +41,18 @@ object Harness {
 
   /** The one session factory. Base conf: `local[cpus]` (or
     * `SPARK_GRAFT_MASTER`, the multi-JVM validation knob —
-    * `local-cluster[2,16,4096]` under spark-submit, SCALE.md §41/§42)
-    * and [[BaseConf]]. `conf` entries are applied after the base, so a
-    * caller may override any of them (Verify and Explain keep WARN
-    * logging). The session gets graft's Catalyst surface at once
+    * `local-cluster[2,16,4096]` under spark-submit, SCALE.md §41/§42),
+    * `cpus` shuffle partitions (one per core keeps every core busy on
+    * the contract corpora) and [[BaseConf]]. `conf` entries are applied
+    * after the base, so a caller may override any of them (Verify and
+    * Explain keep WARN logging; Bench and BenchStream set their own
+    * shuffle width). The session gets graft's Catalyst surface at once
     * ([[GraftExtensions.install]]), so the codegen cache is sized
     * before anything a caller runs compiles a class. */
   def session(app: String, conf: (String, String)*): SparkSession = {
     val base = Seq(
       "spark.master" -> sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
+      "spark.sql.shuffle.partitions" -> cpus.toString,
       "spark.app.name" -> app) ++ BaseConf
     val spark = (base ++ conf).foldLeft(SparkSession.builder()) { case (b, (k, v)) =>
       b.config(k, v)

@@ -100,8 +100,7 @@ object Pipeline {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = Harness.session("graft-pipeline",
-      "spark.sql.shuffle.partitions" -> Harness.cpus.toString)
+    val spark = Harness.session("graft-pipeline")
 
     def stage(name: String, in: Long)(f: => DataFrame): (DataFrame, Long) = {
       val (sec, (out, n)) = Harness.timed { val out = f; (out, out.count()) }

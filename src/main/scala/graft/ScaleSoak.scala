@@ -8,9 +8,8 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.ScaleSoak --scale N <entry…>
   *
-  * Every scale runs the entry under [[Harness.median3]] with the plan
-  * cache off (a memoized DataFrame would skip its shuffle stages in reps
-  * 2 and 3, SCALE.md §36) and the cache cleared between reps, then
+  * Every scale runs the entry under [[Harness.median3]], building it
+  * fresh in each rep and clearing the cache between reps, then
   * [[Harness.scrub]]s. A scale's record holds the rows, the three walls
   * and their median, rep 1's stages, tasks, shuffle-write and spill
   * bytes and generated classes compiled, the longest task of the three
@@ -63,9 +62,7 @@ object ScaleSoak {
     val a = parseArgs(args.toSeq)
     val sf = "/root/testdata/sf0.1"
     val out = s"/tmp/graft_sf0.1x${a.scale}"
-    val spark = Harness.session("graft-scale-soak",
-      "spark.sql.shuffle.partitions" -> Harness.cpus.toString)
-    Catalog.planCacheEnabled = false
+    val spark = Harness.session("graft-scale-soak")
     try {
       buildFull(spark, sf, out, a.scale)
       a.entries.foreach { name =>

@@ -10,11 +10,8 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Q16: 4-table join + filter + agg — exercises scan, pushdown, broadcast
     * dims, shuffle agg in one plan. */
-  def entry(spark: SparkSession): DataFrame = {
-    val dir = "/root/testdata/sf0.001"
-    Catalog.ensure(spark, dir)
-    spark.sql(Queries.sparkSql("q16_multiway_join"))
-  }
+  def entry(spark: SparkSession): DataFrame =
+    queries("q16_multiway_join")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. Lazy val,
     * not def: a def rebuilt the full 395-entry map on EVERY access —

@@ -17,14 +17,10 @@ object Verify {
     // queries without a full-inventory run (the driver never passes it)
     val only: Set[String] = args.find(_.startsWith("only="))
       .map(_.stripPrefix("only=").split(",").toSet).getOrElse(Set.empty)
-    // Shuffle fan-out is the core count (the correctness-gate protocol): one
-    // partition per core keeps every core busy on the contract corpora.
     // SPARK_GRAFT_MASTER=local-cluster[2,16,4096] runs the SAME dump with
     // real executor processes, exercising cross-JVM serialization of
     // every native expression/aggregator buffer (SCALE.md §41).
-    val spark = Harness.session("graft-verify",
-      "spark.sql.shuffle.partitions" -> Harness.cpus.toString,
-      "spark.log.level" -> "WARN")
+    val spark = Harness.session("graft-verify", "spark.log.level" -> "WARN")
     new java.io.File(outDir).mkdirs()
     // Quadratic exact baselines run only on the contract corpora (the
     // driver's /root/testdata SFs); on soak-scale inputs they are the

@@ -4,7 +4,8 @@ import java.io.File
 import java.nio.file.Files
 
 /** Catalog registration on fresh sessions: parquet schemas are inferred
-  * once per source and reused until the source changes. */
+  * once per source and reused until the source changes. Every build of a
+  * declared SQL entry is planned fresh, under the session's current conf. */
 class CatalogSpec extends SparkSpec {
 
   /** Spark jobs `f` starts, counted by the harness listener. */
@@ -43,5 +44,33 @@ class CatalogSpec extends SparkSpec {
     assert(orders.setLastModified(orders.lastModified() + 5000L))
     assert(jobsOf(Catalog.ensure(spark.newSession(), path)) == 1)
     assert(jobsOf(Catalog.ensure(spark.newSession(), path)) == 0)
+  }
+
+  test("a declared SQL entry built again is planned under the current conf") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    def plan() = SparkEntry.queries("q24_broadcast_join")(spark, sf0001)
+      .queryExecution.executedPlan.toString
+    val old = spark.conf.get(key)
+    try {
+      val before = plan()
+      assert(before.contains("BroadcastHashJoin"), before)
+      spark.conf.set(key, "-1")
+      val after = plan()
+      assert(!after.contains("BroadcastHashJoin"), s"built under the old threshold:\n$after")
+    } finally spark.conf.set(key, old)
+  }
+
+  test("a declared SQL entry built again runs every stage again") {
+    def stages(): Int = {
+      val l = Harness.listen(spark)
+      try {
+        val c0 = l.quiesce()
+        SparkEntry.queries("q05_histogram")(spark, sf0001).collect()
+        (l.quiesce() - c0).stages
+      } finally spark.sparkContext.removeSparkListener(l)
+    }
+    val first = stages()
+    assert(first >= 2, s"q05 should shuffle: $first stages")
+    assert(stages() == first, "the second build skipped stages the first computed")
   }
 }

@@ -8,28 +8,19 @@ import org.apache.spark.sql.SparkSession
 class ConcurrencySpec extends SparkSpec {
 
   test("Pipeline.concurrent: 4-thread run returns sequential-identical results") {
-    // a mix of shapes: broadcast joins, windows, aggregations, JSON.
-    // Plan cache OFF for the duration: executing a cached DataFrame
-    // finalizes its AdaptiveSparkPlan, and a later plan-shape spec
-    // examining the same cache entry would then see Initial+Final
-    // renderings (the PlanAuditSpec caveat) — this spec must not
-    // poison the shared cache for ContractSpec.
-    val cacheWas = Catalog.planCacheEnabled
-    Catalog.planCacheEnabled = false
-    try {
-      val names = Seq("q05_histogram", "q10_topk_users", "q16_multiway_join",
-        "q25_ranking", "q31_sessionization", "q39_json_extract",
-        "x113_tfidf_topk", "x138_funnel")
-      Catalog.ensure(spark, sf0001)
-      val tasks = names.map(n => n -> ((s: SparkSession) =>
-        SparkEntry.queries(n)(s, sf0001).collect().map(_.toString).toSeq))
-      val sequential = tasks.map { case (n, f) => n -> f(spark) }.toMap
-      val concurrent = Pipeline.concurrent(spark, tasks, threads = 4)
-      assert(concurrent.keySet == sequential.keySet)
-      names.foreach { n =>
-        assert(concurrent(n) == sequential(n), s"$n diverged under concurrency")
-      }
-    } finally Catalog.planCacheEnabled = cacheWas
+    // a mix of shapes: broadcast joins, windows, aggregations, JSON
+    val names = Seq("q05_histogram", "q10_topk_users", "q16_multiway_join",
+      "q25_ranking", "q31_sessionization", "q39_json_extract",
+      "x113_tfidf_topk", "x138_funnel")
+    Catalog.ensure(spark, sf0001)
+    val tasks = names.map(n => n -> ((s: SparkSession) =>
+      SparkEntry.queries(n)(s, sf0001).collect().map(_.toString).toSeq))
+    val sequential = tasks.map { case (n, f) => n -> f(spark) }.toMap
+    val concurrent = Pipeline.concurrent(spark, tasks, threads = 4)
+    assert(concurrent.keySet == sequential.keySet)
+    names.foreach { n =>
+      assert(concurrent(n) == sequential(n), s"$n diverged under concurrency")
+    }
   }
 
   test("Pipeline.concurrent: duplicate task names are rejected upfront, null results carried") {

@@ -151,6 +151,25 @@ class ContractSpec extends SparkSpec {
     assert(hits.map(_._2).contains("CODEGEN_CACHE_MAX_ENTRIES"), hits)
   }
 
+  // Shim census: Catalog keeps the deprecated plan-cache switch only
+  // because perfbench still assigns it, and nothing reads it. Any other
+  // mention in the program or the specs (a read, or an assignment that
+  // looks like it still means something) fails here. The name is built
+  // from two parts so this file does not mention it.
+  test("shim census: the deprecated plan-cache switch is declared once and used nowhere") {
+    val name = "planCache" + "Enabled"
+    def hits(root: String): Seq[String] = for {
+      path <- java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+        .toArray.map(_.toString).filter(_.endsWith(".scala")).toSeq.sorted
+      (line, i) <- readText(path).linesIterator.zipWithIndex.toSeq if line.contains(name)
+    } yield s"$path:${i + 1}: ${line.trim}"
+    val main = hits("src/main")
+    assert(main.size == 1 && main.head.startsWith("src/main/scala/graft/Catalog.scala:") &&
+      main.head.endsWith(s": @deprecated var $name: Boolean = false"), main.mkString("\n"))
+    val test = hits("src/test")
+    assert(test.isEmpty, test.mkString("\n"))
+  }
+
   // perfbench's session() copies Bench's protocol settings; until it reads
   // them from the program, this guard catches the copy drifting. A key
   // set on one side only must be listed here with its reason, and the

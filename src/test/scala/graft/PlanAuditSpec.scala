@@ -7,18 +7,8 @@ package graft
   */
 class PlanAuditSpec extends SparkSpec {
 
-  // Bypass Catalog's plan cache: a cached DataFrame another spec already
-  // EXECUTED has a mutated AdaptiveSparkPlanExec whose text shows final
-  // ShuffleQueryStage nodes instead of the Exchange operators these
-  // assertions match — audit a fresh, un-executed plan instead.
   private def physical(name: String): String =
-    Queries.sparkSql.get(name) match {
-      case Some(sql) =>
-        Catalog.ensure(spark, sf0001)
-        spark.sql(sql).queryExecution.executedPlan.toString
-      case None =>
-        SparkEntry.queries(name)(spark, sf0001).queryExecution.executedPlan.toString
-    }
+    SparkEntry.queries(name)(spark, sf0001).queryExecution.executedPlan.toString
 
   test("q02: filter and projection reach the parquet scan") {
     val p = physical("q02_project_filter")
@@ -457,14 +447,13 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("x274: stage count at or under its single-UnionLoop ceiling") {
-    // 276 stages at sf0.001 under this spec session (fresh plan, no
-    // Catalog plan cache), measured when the ceiling was set; a plan
-    // change that re-inlines the recursion multiplies it
-    Catalog.ensure(spark, sf0001)
+    // 276 stages at sf0.001 under this spec session, measured when the
+    // ceiling was set; a plan change that re-inlines the recursion
+    // multiplies it
     val l = Harness.listen(spark)
     try {
       val c0 = l.quiesce()
-      spark.sql(Queries.sparkSql("x274_holt_linear")).collect()
+      SparkEntry.queries("x274_holt_linear")(spark, sf0001).collect()
       val d = l.quiesce() - c0
       assert(d.stages <= 276, s"x274 stage count over its ceiling: $d")
     } finally spark.sparkContext.removeSparkListener(l)

@@ -31,10 +31,7 @@ class RulesSpec extends SparkSpec {
     val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-      // bare spark.sql: Catalog.sql's prepared-statement cache would
-      // (correctly) return the pre-threshold plan
-      Catalog.ensure(spark, sf0001)
-      val df = spark.sql(Queries.sparkSql("q38_math_funcs"))
+      val df = SparkEntry.queries("q38_math_funcs")(spark, sf0001)
       val plan = df.queryExecution.optimizedPlan
       val fired = plan.collectFirst {
         case Project(projs, _: GlobalLimit)
@@ -56,9 +53,8 @@ class RulesSpec extends SparkSpec {
     val old = spark.conf.get("spark.sql.execution.topKSortFallbackThreshold")
     try {
       spark.conf.set("spark.sql.execution.topKSortFallbackThreshold", "100")
-      Catalog.ensure(spark, sf0001)
       // q38's LIMIT 500 >= the forced threshold 100
-      val df = spark.sql(Queries.sparkSql("q38_math_funcs"))
+      val df = SparkEntry.queries("q38_math_funcs")(spark, sf0001)
       val plan = df.queryExecution.optimizedPlan
       val twoStage = plan.collectFirst {
         case Project(projs, _: GlobalLimit)
