@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 
 /** The library's `spark.sql.extensions` entry point — the deployment
@@ -16,12 +17,12 @@ import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
   * }}}
   *
   * Injects, at session build time, every row of the companion's table:
-  * the optimizer rules, the planner strategy and the SQL functions.
+  * the optimizer rules, the planner strategies and the SQL functions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.Rules.foreach(r => ext.injectOptimizerRule(_ => r))
-    ext.injectPlannerStrategy(_ => GraftExtensions.Strategy)
+    GraftExtensions.Strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
     GraftExtensions.Functions.foreach(f => ext.injectFunction((f.id, f.info, f.builder)))
   }
 }
@@ -101,9 +102,13 @@ object GraftExtensions {
     *    composition to the fused `md5_prefix32` kernel. */
   val Rules: Seq[Rule[LogicalPlan]] = Seq(plans.DeferProjectionPastTopK, plans.FuseMd5Prefix32)
 
-  /** The planner strategy compiling the native as-of join logical node
-    * to its co-partitioned streaming merge. */
-  val Strategy: plans.AsOfStrategy.type = plans.AsOfStrategy
+  /** The planner strategies:
+    *  - [[plans.AsOfStrategy]] compiles the native as-of join logical
+    *    node to its co-partitioned streaming merge;
+    *  - [[plans.SingleSplitScan]] plans a one-split file scan as one
+    *    partition in a one-partition session, so no exchange goes in
+    *    above it. */
+  val Strategies: Seq[SparkStrategy] = Seq(plans.AsOfStrategy, plans.SingleSplitScan)
 
   /** Entries of Spark's JVM-wide codegen cache (generated class per
     * (class loader, source) key; Spark's default holds 100). Measured
@@ -116,7 +121,7 @@ object GraftExtensions {
   val CodegenCacheEntries = 1024
 
   /** Install the table on a live session (idempotent): functions into
-    * its registry (replacing same-named entries), rules and strategy
+    * its registry (replacing same-named entries), rules and strategies
     * into `spark.experimental` unless already there, and the codegen
     * cache size ([[sizeCodegenCache]]). Serialized here so concurrent
     * callers (Harness.session, Catalog.ensure, AsOf.join) cannot both
@@ -127,7 +132,8 @@ object GraftExtensions {
     val exp = spark.experimental
     val missing = Rules.filterNot(exp.extraOptimizations.contains)
     if (missing.nonEmpty) exp.extraOptimizations ++= missing
-    if (!exp.extraStrategies.contains(Strategy)) exp.extraStrategies ++= Seq(Strategy)
+    val missingStrategies = Strategies.filterNot(exp.extraStrategies.contains)
+    if (missingStrategies.nonEmpty) exp.extraStrategies ++= missingStrategies
     if (!codegenCacheSettled) {
       codegenCacheSettled = true
       sizeCodegenCache(spark.sessionState.conf,

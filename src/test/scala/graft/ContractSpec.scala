@@ -83,7 +83,7 @@ class ContractSpec extends SparkSpec {
   }
 
   // Catalyst census: graft's SQL functions, optimizer rules and planner
-  // strategy are written down once, in GraftExtensions' table, which
+  // strategies are written down once, in GraftExtensions' table, which
   // both the extensions entry point and Catalog.ensure read. A second
   // registration path, or a Column wrapper that resolves its function
   // by name instead of wrapping the expression, fails here.

@@ -64,7 +64,9 @@ class InvariantsSpec extends SparkSpec {
     // Spark text carries the REPARTITION(<Harness.cpus>, …) width hint —
     // the hinted float aggregates x269 (corr) and x272 (sum(1/ln d))
     // among them — executed under different shuffle fan-out AND hint
-    // width: results must be identical row-for-row
+    // width: results must be identical row-for-row. Width 1 plans a
+    // one-split scan as one partition (plans.SingleSplitScan); 3 and 7
+    // plan an exchange above it.
     val hint = s"REPARTITION(${Harness.cpus},"
     val hinted = Queries.all.filter(_.spark.contains(hint)).map(_.name)
     // a fold that drops a hint from its Spark text fails here
@@ -83,7 +85,8 @@ class InvariantsSpec extends SparkSpec {
         .collect().map(_.toString).toSeq
     }
     try risky.foreach { name =>
-      assert(at(name, 3) == at(name, 7),
+      val one = at(name, 1)
+      assert(one == at(name, 3) && one == at(name, 7),
         s"$name changed under different shuffle/hint widths")
     } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
   }

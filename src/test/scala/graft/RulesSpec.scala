@@ -98,10 +98,10 @@ class RulesSpec extends SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
-      // strategy injected at build time (not via spark.experimental)
-      assert(fresh.sessionState.planner.extraPlanningStrategies
-        .contains(plans.AsOfStrategy),
-        "AsOfStrategy must be in extraPlanningStrategies")
+      // strategies injected at build time (not via spark.experimental)
+      assert(Seq(plans.AsOfStrategy, plans.SingleSplitScan)
+        .forall(fresh.sessionState.planner.extraPlanningStrategies.contains),
+        "AsOfStrategy and SingleSplitScan must be in extraPlanningStrategies")
       // persistent-registry functions resolve in bare SQL
       assert(fresh.sql("SELECT fold_accents('café') AS s").head().getString(0) == "cafe")
       assert(fresh.sql(
